@@ -333,13 +333,23 @@ object JdbcReplaceSink {
   }
 
   /** Distributed load: one connection per partition. `connectionFactory`
-    * must be serializable (typically a case class holding url/props). */
+    * must be serializable (typically a case class holding url/props). A
+    * failed partition is rolled back before its connection closes, so
+    * the batch's own error surfaces (some drivers refuse to close a
+    * connection with an open transaction); errors from the rollback or
+    * the close ride along as suppressed exceptions. */
   def write(df: DataFrame, cfg: Config, connectionFactory: () => Connection): Unit =
     df.foreachPartition { rows: Iterator[Row] =>
       if (rows.nonEmpty) {
         val conn = connectionFactory()
         try writePartition(rows, conn, cfg)
-        finally conn.close()
+        catch {
+          case e: Throwable =>
+            try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+            try conn.close() catch { case c: Throwable => e.addSuppressed(c) }
+            throw e
+        }
+        conn.close()
       }
       ()
     }

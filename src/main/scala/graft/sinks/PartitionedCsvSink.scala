@@ -1,6 +1,10 @@
 package graft.sinks
 
+import java.io.IOException
+import java.util.UUID
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
 
 /** S4/S5 — Hive-style partitioned CSV write, quoting disabled, header on
   * (SURVEY.md §2.1). The reference writes `opco_id=NNN/` directories with
@@ -43,5 +47,42 @@ object PartitionedCsvSink {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode("overwrite")
       .csv(path)
+  }
+
+  /** One write job for several targets: `df` is written partitioned by
+    * `routeCol` then `partitionCols` into a hidden `_graft_staging_<uuid>`
+    * directory in the targets' common parent, and each `routeCol=<id>`
+    * subtree is moved to `targets(id)` (a rename on local and HDFS
+    * storage, a copy on object stores), replacing it, with a `_SUCCESS`.
+    * A target that got no rows is replaced by an empty directory with
+    * `_SUCCESS`, like an overwrite with an empty frame, or left untouched
+    * when `skipEmpty`. */
+  def writeRouted(
+      df: DataFrame,
+      routeCol: String,
+      targets: Map[String, String],
+      partitionCols: Seq[String],
+      skipEmpty: Boolean): Unit = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val fs = new Path(targets.values.head).getFileSystem(conf)
+    val dst = targets.map { case (id, p) => id -> fs.makeQualified(new Path(p)) }
+    def ancestors(p: Path) = Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != null).toList
+    // makeQualified rejects a target on another filesystem
+    val parent = dst.values.map(ancestors).reduce((a, b) => a.filter(b.contains)).head
+    val staging = new Path(parent, s"_graft_staging_${UUID.randomUUID()}")
+    try {
+      write(df, staging.toString, routeCol +: partitionCols)
+      dst.foreach { case (id, target) =>
+        val src = new Path(staging, getPartitionPathString(routeCol, id))
+        val landed = fs.exists(src)
+        if (landed || !skipEmpty) {
+          fs.delete(target, true)
+          fs.mkdirs(if (landed) target.getParent else target)
+          if (landed && !fs.rename(src, target))
+            throw new IOException(s"could not move $src to $target")
+          fs.create(new Path(target, "_SUCCESS")).close()
+        }
+      }
+    } finally fs.delete(staging, true)
   }
 }

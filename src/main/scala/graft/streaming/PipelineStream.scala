@@ -97,8 +97,8 @@ object PipelineStream {
     * arrive one file per micro-batch, each batch runs the SAME
     * transform → price-check → broadcast cluster routing as the batch
     * path ([[graft.transform.PaTransform]] — one implementation, two
-    * drivers), and each cluster's rows land in a
-    * `cluster=<id>/batch_id=<id>`-scoped partitioned CSV directory.
+    * drivers, one write job per batch), and each cluster's rows land in
+    * a `cluster=<id>/batch_id=<id>`-scoped partitioned CSV directory.
     * The batch_id-scoped overwrite makes the at-least-once foreachBatch
     * effectively-once, exactly as the price-zone stream. Routing is
     * row-wise (stateless), so per-batch routing ≡ global routing and
@@ -125,21 +125,13 @@ object PipelineStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val df = graft.transform.PaTransform.transform(batch)
-        val badPrice = graft.transform.PaTransform.invalidPriceCount(df)
-        val routed = graft.transform.PaTransform.route(df, mapping, activeOpcos)
-        routed.byCluster.foreach { case (cid, frame) =>
-          // single-opco arrival files route each batch to ONE cluster;
-          // skip the empty side rather than litter header-only dirs
-          if (!frame.isEmpty) {
-            frame.write
-              .partitionBy("opco_id")
-              .option("header", "true")
-              .mode("overwrite")
-              .csv(s"$outputDir/cluster=$cid/batch_id=$batchId")
-          }
-        }
-        reports.add(PaBatchReport(batchId, df.count(), badPrice))
+        // one job per batch: single-opco arrival files route each batch
+        // to ONE cluster, and the empty side is skipped rather than
+        // littered with header-only dirs
+        val (records, badPrice) = graft.transform.PaTransform.writeRouted(
+          graft.transform.PaTransform.transform(batch), mapping, activeOpcos,
+          cid => s"$outputDir/cluster=$cid/batch_id=$batchId", skipEmpty = true)
+        reports.add(PaBatchReport(batchId, records, badPrice))
         ()
       }
       .start()

@@ -19,8 +19,9 @@ final case class ValidationReport(
   def failedGroupKeys: Seq[String] = failedGroups.map(_.orNull)
 }
 
-/** Group-attribution validation: one flag projection, one per-group
-  * aggregate, one broadcast anti-join.
+/** Group-attribution validation: one flag projection and one per-group
+  * aggregate; `run` removes the failed groups with a filter over their
+  * collected keys, `validRows` with a broadcast anti-join.
   *
   * Semantics (SURVEY.md §2.3): error attribution is group-level — one bad
   * row poisons its whole group (`get_opco_list`,
@@ -31,11 +32,11 @@ final case class ValidationReport(
   * by whole-stage codegen; the failed-group set is produced by a partial
   * (map-side combined) aggregate on the group key and is at most
   * |groups| rows, so the removal join broadcasts. Nothing here collects
-  * data rows to the driver; `report()` collects only the per-group
-  * summary (bounded by group cardinality, dimension-sized by contract).
+  * data rows to the driver; `run` collects only the per-group summary
+  * (bounded by group cardinality, dimension-sized by contract).
   * Unlike the reference's `~isin(failed_list)` — which silently drops
-  * ALL rows when a NULL key is in the list (SQL NOT IN semantics) — the
-  * removal join is null-safe.
+  * ALL rows when a NULL key is in the list (SQL NOT IN semantics) — both
+  * removals are null-safe.
   */
 object Validator {
 
@@ -82,8 +83,11 @@ object Validator {
       .select(df.columns.map(col).toIndexedSeq: _*)
   }
 
-  /** Full run: valid rows + a one-pass report. Triggers two jobs total
-    * (summary collect; valid output is left lazy for the caller's sink).
+  /** Full run: valid rows + a one-pass report. One job, the summary
+    * collect, scans the input; the valid frame is left lazy for the
+    * caller's sink, a null-safe filter over the failed keys already
+    * collected, so writing it is one more scan and no aggregate
+    * (`ScanCountSpec`). Same rows as [[validRows]].
     */
   def run(df: DataFrame, rules: Seq[ValidationRule], groupCol: String): (DataFrame, ValidationReport) = {
     val f = flagged(df, rules)
@@ -99,6 +103,8 @@ object Validator {
       .sortBy(k => (k.isDefined, k.getOrElse("")))
     val validCount = received - failed.map(_.getLong(1)).sum
     val report = ValidationReport(received, validCount, failedKeys, byRule)
-    (validRows(df, rules, groupCol), report)
+    val (nullKey, keys) = failed.map(_.get(0)).partition(_ == null)
+    val inFailed = if (keys.isEmpty) lit(false) else col(groupCol).isin(keys.toIndexedSeq: _*)
+    (df.filter(when(col(groupCol).isNull, lit(nullKey.isEmpty)).otherwise(!inFailed)), report)
   }
 }

@@ -130,6 +130,29 @@ class JdbcDerbyIntegrationSpec extends SparkSpec {
     c2.close()
   }
 
+  test("distributed write: a failed batch surfaces its own error, not the close") {
+    val c = DerbyDb.conn()
+    c.createStatement().execute(
+      """CREATE TABLE pz_notnull (
+        |  supc INT NOT NULL, customer_id INT NOT NULL, price_zone INT NOT NULL,
+        |  arrived_time VARCHAR(32),
+        |  PRIMARY KEY (supc, customer_id))""".stripMargin)
+    c.close()
+    val df = Seq((1, 1, Option(5)), (2, 2, Option.empty[Int]))
+      .toDF("supc", "customer_id", "price_zone").coalesce(1)
+    val e = intercept[Exception] {
+      JdbcReplaceSink.write(df, cfg("pz_notnull"), new DerbyConnFactory)
+    }
+    def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
+    val messages = chain(e).map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("cannot accept a NULL value"), messages)
+    assert(!messages.contains("transaction is still active"), messages)
+    // the rollback left nothing behind
+    val c2 = DerbyDb.conn()
+    assert(dump(c2, "pz_notnull").isEmpty)
+    c2.close()
+  }
+
   test("binary key column: replace + in-chunk dedup bind real byte arrays") {
     // The DELETE must bind the ORIGINAL Array[Byte] (setObject cannot
     // bind the comparable-wrapped Seq the dedup map keys on).

@@ -53,4 +53,38 @@ class PipelineStreamSpec extends SparkSpec {
     val back = spark.read.option("header", "true").csv(s"$out/batch_id=*/opco_id=019")
     assert(back.count() >= 2) // f1's 019 row + f3's row
   }
+
+  test("PA stream: one batch per file lands only its non-empty cluster, batch-scoped") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val in = Files.createTempDirectory("pas_in").toString
+    val out = Files.createTempDirectory("pas_out").toString
+    val ckpt = Files.createTempDirectory("pas_ckpt").toString
+    // file columns in the stream's positional schema order (Schemas.paRaw)
+    val header = "ITEM_ID|PRICE_ZONE_ID|EFFECTIVE_DATE|LOCAL_REFERENCE_PRICE|EXPORT_DATE|ITEM_ATTR_5_NM|CURRENT_PRICE|REASON|NEW_PRICE"
+    write(in, "pa_1.csv", s"""$header
+      |9002908|018-5|2020-08-06 00:00:00|22.68|2020-08-05 12:30:45|N|1|r|2
+      |9002909|018-3|2020-08-07 10:00:00|-1.5|2020-08-05 12:30:45|Y|1|r|2
+      |""".stripMargin)
+    write(in, "pa_2.csv", s"""$header
+      |9002910|019-2|2020-08-07 10:00:00|10.00|2020-08-05 12:30:45|N|1|r|2
+      |""".stripMargin)
+    val mapping = spark.createDataFrame(Seq(Row("018", "01"), Row("019", "02")).asJava,
+      StructType(Seq(StructField("opco_id", StringType), StructField("cluster_id", StringType))))
+
+    val reports = PipelineStream.runPaStream(
+      spark, in, out, ckpt, mapping, Seq("018", "019"), maxFilesPerTrigger = Some(1))
+
+    assert(reports.map(r => (r.records, r.badPrice)).toSet === Set((2L, 1L), (1L, 0L)))
+    def batches(cluster: String) = Option(new java.io.File(s"$out/cluster=$cluster").list())
+      .toSeq.flatten.filter(_.startsWith("batch_id=")).sorted
+    // each batch routes to one cluster; the other cluster gets no dir
+    assert(batches("01").size === 1 && batches("02").size === 1)
+    assert(batches("01") != batches("02"))
+    assert(new java.io.File(out).list().sorted.toSeq === Seq("cluster=01", "cluster=02"))
+    val back = spark.read.option("header", "true").csv(out)
+    assert(back.columns.toSet.contains("batch_id") && back.count() === 3)
+    assert(new java.io.File(s"$out/cluster=01/${batches("01").head}/_SUCCESS").isFile)
+  }
 }

@@ -105,6 +105,70 @@ class TransformSpec extends SparkSpec {
     assert(back.count() === 1)
   }
 
+  private val paCsv =
+    """ITEM_ID|LOCAL_REFERENCE_PRICE|CURRENT_PRICE|REASON|NEW_PRICE|ITEM_ATTR_5_NM|EFFECTIVE_DATE|EXPORT_DATE|PRICE_ZONE_ID
+      |9002908|22.68|1|r|2|N|2020-08-06 00:00:00|2020-08-05 12:30:45|018-5
+      |9002909|-1.5|1|r|2|Y|2020-08-07 10:00:00|2020-08-05 12:30:45|019-3
+      |9002910|0|1|r|2|N|2020-08-07 10:00:00|2020-08-05 12:30:45|022-2
+      |9002911|abc|1|r|2|N|2020-08-07 10:00:00|2020-08-05 12:30:45|018-1
+      |9002912|1.00|1|r|2|N|2020-08-07 10:00:00|2020-08-05 12:30:45|023
+      |""".stripMargin
+
+  private def mappingOf(rows: (String, String)*) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map { case (o, c) => Row(o, c) }.asJava,
+      StructType(Seq(StructField("opco_id", StringType, true), StructField("cluster_id", StringType, true))))
+  }
+
+  /** Runs `runFile` on [[paCsv]] over stale cluster directories; every
+    * row is routed nowhere, so both clusters must come back empty. */
+  private def assertNothingRoutes(mapping: org.apache.spark.sql.DataFrame, active: Seq[String]): Unit = {
+    val in = tmpDir("pa_none_in")
+    val outBase = tmpDir("pa_none_out")
+    Files.writeString(java.nio.file.Paths.get(in, "pa.csv"), paCsv)
+    Files.createDirectories(java.nio.file.Paths.get(outBase, "cluster_01", "opco_id=999"))
+    val (total, badPrice) = PaTransform.runFile(
+      spark, s"$in/pa.csv", cid => s"$outBase/cluster_$cid", mapping, active)
+    assert(total === 5 && badPrice === 2)
+    for (cid <- Seq("01", "02")) {
+      val dir = new java.io.File(s"$outBase/cluster_$cid")
+      assert(dir.isDirectory, s"cluster_$cid missing")
+      assert(!dir.listFiles().exists(_.getName.startsWith("opco_id=")), s"cluster_$cid not empty")
+      assert(new java.io.File(dir, "_SUCCESS").isFile, s"cluster_$cid has no _SUCCESS")
+    }
+    assert(new java.io.File(outBase).list().sorted.toSeq === Seq("cluster_01", "cluster_02"))
+  }
+
+  test("pa end-to-end, nothing routes: empty active set keeps exact counts") {
+    assertNothingRoutes(mappingOf("018" -> "01", "019" -> "02"), active = Seq.empty)
+  }
+
+  test("pa end-to-end, nothing routes: mapping without cluster 01/02 rows") {
+    assertNothingRoutes(mappingOf("018" -> "03", "019" -> "04"), active = Seq("018", "019"))
+  }
+
+  test("pa end-to-end, nothing routes: every row unmapped") {
+    assertNothingRoutes(mappingOf("030" -> "01", "031" -> "02"), active = Seq("018", "019", "022"))
+  }
+
+  test("pa end-to-end: one write job lands both clusters and replaces stale output") {
+    val in = tmpDir("pa_both_in")
+    val outBase = tmpDir("pa_both_out")
+    Files.writeString(java.nio.file.Paths.get(in, "pa.csv"), paCsv)
+    Files.createDirectories(java.nio.file.Paths.get(outBase, "cluster_02", "opco_id=999"))
+    val (total, badPrice) = PaTransform.runFile(
+      spark, s"$in/pa.csv", cid => s"$outBase/cluster_$cid",
+      mappingOf("018" -> "01", "019" -> "02"), activeOpcos = Seq("018", "019"))
+    assert(total === 5 && badPrice === 2)
+    def opcos(cid: String) = new java.io.File(s"$outBase/cluster_$cid").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted.toSeq
+    assert(opcos("01") === Seq("opco_id=018") && opcos("02") === Seq("opco_id=019"))
+    assert(new java.io.File(s"$outBase/cluster_02/_SUCCESS").isFile)
+    assert(spark.read.option("header", "true").csv(s"$outBase/cluster_01").count() === 2)
+    // the staging directory is gone once the clusters are in place
+    assert(new java.io.File(outBase).list().sorted.toSeq === Seq("cluster_01", "cluster_02"))
+  }
+
   test("pa routing: cluster split + invalid-or-inactive bucket (J1)") {
     import scala.jdk.CollectionConverters._
     val mapping = spark.createDataFrame(

@@ -120,6 +120,29 @@ class ValidatorSpec extends SparkSpec {
     assert(got === Seq(null.asInstanceOf[String], ""))
   }
 
+  test("run's valid rows equal validRows with a null group on either side") {
+    def rowsOf(d: DataFrame) = d.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+    val r = Seq(Rules.nonNullNumeric("customer_id"))
+    val nullFails = Seq(
+      Seq(null, "bad", "1234567", "5", "2020-08-06 00:00:00"),
+      Seq(null, "104612", "1234567", "5", "2020-08-06 00:00:00"),
+      Seq("", "104612", "1234567", "5", "2020-08-06 00:00:00"),
+      validRow)
+    val nullPasses = Seq(
+      Seq(null, "104612", "1234567", "5", "2020-08-06 00:00:00"),
+      Seq("", "104612", "1234567", "5", "2020-08-06 00:00:00"),
+      Seq("020", "abc", "1234567", "5", "2020-08-06 00:00:00"),
+      validRow)
+    for ((rows, failed, kept) <- Seq(
+        (nullFails, Seq(null.asInstanceOf[String]), 2),
+        (nullPasses, Seq("020"), 3))) {
+      val (valid, report) = Validator.run(df(rows), r, "opco_id")
+      assert(report.failedGroupKeys === failed)
+      assert(rowsOf(valid) === rowsOf(Validator.validRows(df(rows), r, "opco_id")))
+      assert(valid.count() === kept)
+    }
+  }
+
   test("F8 removal is a no-op on empty failed list (test_data_validator_opco.py)") {
     val rows = Seq(validRow, Seq("020", "104613", "7654321", "4", "2020-08-06 00:00:00"))
     val (valid, report) = Validator.run(df(rows), allRules, "opco_id")
