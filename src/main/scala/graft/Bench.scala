@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every gate query in `SparkEntry.queries` against
@@ -21,105 +20,6 @@ import scala.util.control.NonFatal
   * Full detail (every individual run time) is also written to
   * `bench_detail.json` in the working directory.
   */
-/** Session bring-up shared by the suite bench and the isolated-wall
-  * child JVMs ([[graft.tools.BenchIsolated]]) — the two must measure
-  * under IDENTICAL configs and warmup or the suite-vs-isolated ratio
-  * stops meaning "contention". */
-object BenchSupport {
-  /** Shuffle/spill scratch on guarded tmpfs (r7's bench I/O finding):
-    * suite shuffle files are MB-scale at bench sf, but routing them
-    * through the host disk let its latency variance move disk-bound
-    * gates ~2× between otherwise identical runs. 4 GB headroom guard;
-    * dir is deleted at JVM exit. */
-  def tmpfsLocalDir(): Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite &&
-        shm.getUsableSpace > 4L * 1024 * 1024 * 1024) {
-      val d = new java.io.File(shm,
-        s"graft_local_${ProcessHandle.current().pid()}")
-      if (d.isDirectory || d.mkdirs()) {
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(d)
-        }))
-        Some(d.getAbsolutePath)
-      } else None
-    } else None
-  }
-
-  def session(cpus: String): SparkSession = {
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as epoch-nanos long (queries convert as needed).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    tmpfsLocalDir().fold(builder0)(d =>
-      builder0.config("spark.local.dir", d)).getOrCreate()
-  }
-
-  def warmup(spark: SparkSession, sfDir: String): Unit = {
-    // Warmup: touch every table once (file-index + footer reads) so the
-    // first timed query doesn't absorb session start-up costs.
-    graft.Tables.names.foreach { t =>
-      try graft.Tables(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    // …and run one synthetic scan→project→agg→join→sort pipeline to JIT
-    // the codegen/compile/shuffle infrastructure (Janino, unsafe row
-    // writers, exchange setup): measured ~3s landing on whichever query
-    // happened to run first otherwise.
-    locally {
-      import org.apache.spark.sql.functions._
-      val w = spark.range(200000).select(col("id"), (col("id") % 97).as("k"),
-        col("id").cast("string").as("s"))
-      val agg = w.filter(col("id") % 3 === 0)
-        .groupBy(col("k")).agg(count(lit(1)).as("n"), sum(length(col("s"))).as("len"))
-      agg.join(w.filter(col("id") < 100), Seq("k")).orderBy(col("k")).count()
-    }
-    // …and one 2-row file-source streaming aggregate: the FIRST streaming
-    // query in a session pays ~4-5s of MicroBatchExecution init (executor
-    // threads, offset/commit logs, state-store machinery, stateful-agg
-    // codegen) that otherwise lands on whichever st-query runs first.
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      val dir = java.nio.file.Files.createTempDirectory("graft_warm_stream").toString
-      spark.range(2).select(col("id"), (col("id") % 2).as("k"))
-        .write.mode("overwrite").parquet(dir)
-      val schema = spark.read.parquet(dir).schema
-      val q = spark.readStream.schema(schema).parquet(dir)
-        .groupBy(col("k")).count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_warmup_stream").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } catch { case _: Throwable => () }
-  }
-
-  /** Cross-query hygiene (r4 finding, see Bench main loop). */
-  def hygiene(spark: SparkSession): Unit = {
-    try {
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("graft_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      org.apache.spark.sql.GraftStreamingBridge.unloadAllStateStores()
-      spark.catalog.clearCache()
-      // r9: gates now pin fan-out subtrees with lazy localCheckpoints,
-      // whose RDD blocks are otherwise released only when the
-      // ContextCleaner gets around to the dead RDDs — synchronous
-      // unpersist here keeps one gate's cache from pressuring the next
-      // gate's timing (the dropped DataFrames are never reused).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    } catch { case NonFatal(_) => () }
-    System.gc()
-  }
-}
-
 object Bench {
   private val Runs = 3
 

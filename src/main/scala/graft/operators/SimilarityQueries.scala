@@ -2695,7 +2695,7 @@ object SimilarityQueries {
   // length, and basin size. The oracle walks the SAME n steps
   // sequentially in DuckDB's recursive CTE — two encodings of f^n,
   // one answer. Scale shape: O(log n) rounds × one n-row shuffle,
-  // lineage cut by an eager per-round localCheckpoint (the s12
+  // lineage cut by an eager per-round iterative pin (the s12
   // discipline); the driver sees only the two bounded scalars (n, R).
   def s37(spark: SparkSession, dir: String): DataFrame = {
     val nodes = Tables.customer(spark, dir).select(col("c_custkey").as("v"))
@@ -2704,14 +2704,14 @@ object SimilarityQueries {
     def f(c: org.apache.spark.sql.Column) = (c * c + lit(7L)) % lit(n) + lit(1L)
     var st = nodes
       .select(col("v"), f(col("v")).as("next"), f(col("v")).as("mn"))
-      .localCheckpoint() // truncate before the doubling chain starts
+      .transform(graft.Pins.pinIterative(_, eager = true)) // truncate before the doubling chain starts
     for (_ <- 1 to rounds.toInt) {
       val b = st.select(col("v").as("bv"), col("next").as("bnext"),
         col("mn").as("bmn"))
       st = st.join(b, col("next") === col("bv"))
         .select(col("v"), col("bnext").as("next"),
           least(col("mn"), col("bmn")).as("mn"))
-        .localCheckpoint() // eager: materialize the round, cut lineage
+        .transform(graft.Pins.pinIterative(_, eager = true)) // materialize the round, cut lineage
     }
     // cycle nodes = image of f^(2^R); each carries its cycle min as mn
     val cyc = st.join(

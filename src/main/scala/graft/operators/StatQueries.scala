@@ -487,7 +487,7 @@ object StatQueries {
       .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
     val rk = RelationalQueries.globalRank(daily, Seq(col("day")), "t")
       .select(col("t"), col("cents"))
-      .localCheckpoint(eager = false) // day-cardinality; reused 2× (x40 pattern)
+      .transform(graft.Pins.pinForFanout(_)) // day-cardinality; reused 2× (x40 pattern)
     val signs = rk.join(rk.select((col("t") + 1L).as("t2"),
         col("cents").as("prev")), col("t") === col("t2"))
       .filter(col("cents") =!= col("prev"))
@@ -495,7 +495,7 @@ object StatQueries {
         .as("s"))
     val seq2 = RelationalQueries.globalRank(signs, Seq(col("t")), "u")
       .select(col("u"), col("s"))
-      .localCheckpoint(eager = false) // reused 3× (transitions + totals)
+      .transform(graft.Pins.pinForFanout(_)) // reused 3× (transitions + totals)
     val trans = seq2.join(seq2.select((col("u") + 1L).as("u2"),
         col("s").as("sp")), col("u") === col("u2"))
       .agg(sum(when(col("s") =!= col("sp"), 1L).otherwise(0L)).as("chg"))

@@ -172,7 +172,7 @@ object Similarity {
       .filter(col("rn") <= shortlist)
       .select(col("query_id"), col("cand_id"), col("rel_ppm"),
         col("cv"), col("cn"))
-      .localCheckpoint(eager = false) // reused by the self-join below
+      .transform(graft.Pins.pinForFanout(_)) // reused by the self-join below
     val sims = short.as("a").join(short.as("b"),
         col("a.query_id") === col("b.query_id") &&
           col("a.cand_id") =!= col("b.cand_id"))

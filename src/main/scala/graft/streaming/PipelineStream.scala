@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+import graft.sinks.PartitionedCsvSink
 import graft.transform.PriceZoneTransform
 import graft.validate.{ValidationReport, Validator}
 
@@ -54,6 +55,10 @@ object PipelineStream {
     val reader0 = spark.readStream
       .schema(rawSchema)
       .option("header", "true")
+      // check each file's header against the schema's names instead of
+      // binding by position: a reordered file fails the stream rather
+      // than loading garbled
+      .option("enforceSchema", "false")
     val raw = maxFilesPerTrigger
       .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n))
       .csv(inputDir)
@@ -71,11 +76,8 @@ object PipelineStream {
           // batchId-scoped path + overwrite: a batch replayed after a
           // failure between write and checkpoint commit lands in the
           // same directory, replacing (not duplicating) its output
-          PriceZoneTransform.finalize(valid).write
-            .partitionBy("opco_id")
-            .option("header", "true")
-            .mode("overwrite")
-            .csv(s"$outputDir/batch_id=$batchId")
+          PartitionedCsvSink.write(PriceZoneTransform.finalize(valid),
+            s"$outputDir/batch_id=$batchId", Seq("opco_id"))
         }
         reports.add(BatchReport(batchId, report))
         ()
@@ -116,6 +118,7 @@ object PipelineStream {
     val reader0 = spark.readStream
       .schema(graft.schema.Schemas.paRaw)
       .option("header", "true")
+      .option("enforceSchema", "false") // as the price-zone stream
       .option("sep", "|")
     val raw = maxFilesPerTrigger
       .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Child JVM of [[graft.Bench]]'s isolated-wall pass (VERDICT r8 item
@@ -16,13 +17,13 @@ object BenchIsolated {
   private def fmt(d: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, d)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outFile = args(1)
-    val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.BenchSupport.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+  /** Warm `spark` up, then time each gate in `names` as the suite
+    * bench does: 3 × `count()`, a blocking unpersist of pin blocks after
+    * each run, [[graft.BenchSupport.hygiene]] after each gate. Returns
+    * each gate's run times in seconds; a gate whose first run fails is
+    * left out. Shared by [[main]] and `Dev time`. */
+  def time(spark: SparkSession, sfDir: String,
+      names: Seq[String]): collection.Map[String, Seq[Double]] = {
     graft.BenchSupport.warmup(spark, sfDir)
     val out = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     names.foreach { name =>
@@ -48,6 +49,17 @@ object BenchIsolated {
       if (times.nonEmpty) out(name) = times.toSeq
       graft.BenchSupport.hygiene(spark)
     }
+    out
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val outFile = args(1)
+    val names = args.drop(2).toSeq
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.BenchSupport.session(cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    val out = time(spark, sfDir, names)
     val json = out.map { case (n, ts) =>
       "\"" + n + "\":" + ts.map(fmt).mkString("[", ",", "]")
     }.mkString("{", ",", "}")

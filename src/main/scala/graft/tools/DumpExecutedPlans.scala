@@ -1,11 +1,10 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS_SF01.md: the EXECUTED (post-AQE, isFinalPlan=true)
-  * physical plan of every heavy batch gate at bench scale (sf0.1,
-  * local[32] — the driver's bench configuration). This closes the
+  * physical plan of every heavy batch gate at bench scale (sf0.1, on
+  * the bench session with `SPARK_GRAFT_CPUS` cores). This closes the
   * static-plan/executed-plan gap: `DumpPlans` explains at sf0.01
   * without running, so AQE's runtime broadcast/SMJ choices (made from
   * actual exchange sizes) never appear there — r6's q58 regression hid
@@ -49,18 +48,13 @@ object DumpExecutedPlans {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "PLANS_SF01.md"
     val names = if (args.length > 2) args.drop(2).toSeq else defaultHeavy
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.BenchSupport.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS_SF01 — EXECUTED plans of heavy gates at bench scale\n\n")
     sb.append(s"Generated by `graft.tools.DumpExecutedPlans` on `$sfDir`\n")
-    sb.append("(local[32], 32 shuffle partitions — the bench configuration).\n")
+    sb.append(s"(local[$cpus], $cpus shuffle partitions — the bench session).\n")
     sb.append("Each query was RUN to a noop sink first, so every\n")
     sb.append("`AdaptiveSparkPlan` below is `isFinalPlan=true`: the broadcast\n")
     sb.append("vs sort-merge choices shown are the ones AQE actually made from\n")

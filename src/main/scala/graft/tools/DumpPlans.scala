@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: the formatted physical plan of each headline query —
   * reviewable evidence of pushdown, pruning, broadcast choice, and
@@ -242,17 +241,12 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.BenchSupport.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.tools.DumpPlans` on `$sfDir`. What to look\n")
+    sb.append(s"Generated by `graft.tools.DumpPlans` on `$sfDir` (local[$cpus]). What to look\n")
     sb.append("for: `PushedFilters`/`ReadSchema` at every scan (pushdown +\n")
     sb.append("pruning), `BroadcastHashJoin` on dimension joins, \n")
     sb.append("`TakeOrderedAndProject` for top-k, `partial_*` aggregates before\n")

@@ -1,12 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.streaming.{StreamAudit, Streaming}
 
 /** Writes STATE_SF01.md: the streaming twin of `DumpExecutedPlans`'
   * batch-plan audit. For every heavy streaming gate this dumps, at
-  * bench scale (sf0.1, local[32]):
+  * bench scale (sf0.1, `SPARK_GRAFT_CPUS` cores):
   *
   *  1. a CHUNKED REPLAY — events re-chunked into contiguous ts-range
   *     files ([[Streaming.chunkedEventsDir]]) and admitted one file per
@@ -94,13 +93,8 @@ object DumpStreamState {
     val out = if (args.length > 1) args(1) else "STATE_SF01.md"
     val chunks = if (args.length > 2) args(2).toInt else 8
     val gates = if (args.length > 3) args.drop(3).toSeq else defaultGates
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.BenchSupport.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val records = new java.util.concurrent.ConcurrentLinkedQueue[StreamAudit.QueryRecord]
@@ -110,7 +104,7 @@ object DumpStreamState {
     val sb = new StringBuilder
     sb.append("# STATE_SF01 — per-micro-batch state of the heavy streaming gates at bench scale\n\n")
     sb.append(s"Generated by `graft.tools.DumpStreamState` on `$sfDir` ")
-    sb.append(s"(local[32]; events replayed as $chunks contiguous ts-range files, one per micro-batch).\n\n")
+    sb.append(s"(local[$cpus]; events replayed as $chunks contiguous ts-range files, one per micro-batch).\n\n")
     sb.append("For each gate: the chunked replay's `StateOperatorProgress` per micro-batch\n")
     sb.append("(the engine's own state counters — rows held, updated, evicted, store memory),\n")
     sb.append("a slicing-invariance check (replay result must hash-equal the gate's normal\n")

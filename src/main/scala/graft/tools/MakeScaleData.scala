@@ -28,13 +28,7 @@ object MakeScaleData {
     val out = if (args.length > 1) args(1) else "/tmp/sf1_synth"
     val copies = if (args.length > 2) args(2).toInt else 10
     val relCopies = if (args.length > 3) args(3).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchSupport.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
     build(spark, src, out, copies, relCopies)
     spark.stop()

@@ -68,10 +68,11 @@ class PinGateSpec extends SparkSpec {
 
   // representative pin consumers: prefix-sum helper (x30), multi-pin
   // merge (x9), basket fan-out (q34), graph loop + packed majority
-  // (s12), bigram fan-outs (t38), prefix-filter (d26)
+  // (s12), bigram fan-outs (t38), prefix-filter (d26), self-join
+  // fan-outs (x48, s27), eager pointer-doubling rounds (s37)
   private val pinGates = Seq("x30_abc_pareto", "x9_scd2_merge",
     "q34_frequent_pairs", "s12_label_prop_fixpoint", "t38_kneser_ney",
-    "d26_prefix_filter")
+    "d26_prefix_filter", "x48_runs_test", "s27_mmr", "s37_pointer_doubling")
 
   test("pin.mode=persist (lineage kept) matches the localCheckpoint default") {
     pinGates.foreach { name =>
@@ -88,11 +89,19 @@ class PinGateSpec extends SparkSpec {
 
   test("pin.mode=reliable (checkpoint dir) matches the default") {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_pin_ckpt")
+    val saved = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(ckpt.toString)
-    val local = canon(gate("x30_abc_pareto"))
-    val reliable = withConf("spark.graft.pin.mode" -> "reliable") {
-      canon(gate("x30_abc_pareto"))
+    try {
+      val local = canon(gate("x30_abc_pareto"))
+      val reliable = withConf("spark.graft.pin.mode" -> "reliable") {
+        canon(gate("x30_abc_pareto"))
+      }
+      assert(local == reliable)
+    } finally {
+      // restore the previous dir (null clears it): later specs must not
+      // write into the deleted temp dir
+      spark.sparkContext.setCheckpointDir(saved.orNull)
+      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
-    assert(local == reliable)
   }
 }

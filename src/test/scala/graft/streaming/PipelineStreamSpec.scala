@@ -61,7 +61,7 @@ class PipelineStreamSpec extends SparkSpec {
     val in = Files.createTempDirectory("pas_in").toString
     val out = Files.createTempDirectory("pas_out").toString
     val ckpt = Files.createTempDirectory("pas_ckpt").toString
-    // file columns in the stream's positional schema order (Schemas.paRaw)
+    // file columns in the contract header order (Schemas.paRaw)
     val header = "ITEM_ID|PRICE_ZONE_ID|EFFECTIVE_DATE|LOCAL_REFERENCE_PRICE|EXPORT_DATE|ITEM_ATTR_5_NM|CURRENT_PRICE|REASON|NEW_PRICE"
     write(in, "pa_1.csv", s"""$header
       |9002908|018-5|2020-08-06 00:00:00|22.68|2020-08-05 12:30:45|N|1|r|2
@@ -86,5 +86,29 @@ class PipelineStreamSpec extends SparkSpec {
     val back = spark.read.option("header", "true").csv(out)
     assert(back.columns.toSet.contains("batch_id") && back.count() === 3)
     assert(new java.io.File(s"$out/cluster=01/${batches("01").head}/_SUCCESS").isFile)
+  }
+
+  test("PA stream: a file whose header is out of contract order fails, not loads garbled") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val in = Files.createTempDirectory("pas_hdr_in").toString
+    val out = Files.createTempDirectory("pas_hdr_out").toString
+    val ckpt = Files.createTempDirectory("pas_hdr_ckpt").toString
+    // the row's price is negative: bound by name it is 1 bad price, bound
+    // by position PRICE_ZONE_ID would read "-1.5" and the price "2020-…"
+    write(in, "pa_1.csv",
+      """ITEM_ID|LOCAL_REFERENCE_PRICE|EFFECTIVE_DATE|EXPORT_DATE|ITEM_ATTR_5_NM|CURRENT_PRICE|REASON|NEW_PRICE|PRICE_ZONE_ID
+        |9002909|-1.5|2020-08-07 10:00:00|2020-08-05 12:30:45|Y|1|r|2|018-3
+        |""".stripMargin)
+    val mapping = spark.createDataFrame(Seq(Row("018", "01")).asJava,
+      StructType(Seq(StructField("opco_id", StringType), StructField("cluster_id", StringType))))
+
+    val e = intercept[Exception](PipelineStream.runPaStream(
+      spark, in, out, ckpt, mapping, Seq("018"), maxFilesPerTrigger = Some(1)))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msgs.contains("CSV header does not conform to the schema"), msgs)
+    assert(Option(new java.io.File(out).list()).forall(_.isEmpty))
   }
 }

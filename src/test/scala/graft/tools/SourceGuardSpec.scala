@@ -1,0 +1,53 @@
+package graft.tools
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level guards for the two single paths the engine keeps:
+  * every session comes from [[graft.BenchSupport.session]] (so a tool's
+  * number is a number the bench would give), and every materialization
+  * pin goes through [[graft.Pins]] (so `spark.graft.pin.mode` reaches
+  * it). Comment lines are skipped: scaladoc may show the raw calls. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** (path relative to `root`, 1-based line number, line) of every
+    * non-comment line in `src/main/scala`. */
+  private lazy val codeLines: Seq[(String, Int, String)] = {
+    val files = Files.walk(root)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally files.close()
+  }.flatMap { (f: Path) =>
+    Files.readAllLines(f).asScala.zipWithIndex.collect {
+      case (line, i) if !isComment(line) => (root.relativize(f).toString, i + 1, line)
+    }
+  }
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
+
+  private def offenders(bad: String => Boolean, allowedFile: String): Seq[String] =
+    codeLines.collect {
+      case (f, n, line) if bad(line) && f != allowedFile => s"$f:$n: ${line.trim}"
+    }
+
+  test("the source tree is where the guards look") {
+    assert(codeLines.exists(_._1 == "graft/BenchSupport.scala"))
+    assert(codeLines.exists(_._1 == "graft/Pins.scala"))
+  }
+
+  test("SparkSession.builder() only in BenchSupport") {
+    val hits = offenders(_.contains("SparkSession.builder()"), "graft/BenchSupport.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("localCheckpoint( and .checkpoint( only in Pins") {
+    val hits = offenders(l => l.contains("localCheckpoint(") || l.contains(".checkpoint("),
+      "graft/Pins.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}
