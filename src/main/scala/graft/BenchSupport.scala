@@ -69,19 +69,27 @@ object BenchSupport {
     // query in a session pays ~4-5s of MicroBatchExecution init (executor
     // threads, offset/commit logs, state-store machinery, stateful-agg
     // codegen) that otherwise lands on whichever st-query runs first.
+    // Its input, checkpoint and memory view are removed afterwards.
+    val dir = java.nio.file.Files.createTempDirectory("graft_warm_stream").toFile
     try {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.streaming.Trigger
-      val dir = java.nio.file.Files.createTempDirectory("graft_warm_stream").toString
+      val data = new java.io.File(dir, "data").getPath
       spark.range(2).select(col("id"), (col("id") % 2).as("k"))
-        .write.mode("overwrite").parquet(dir)
-      val schema = spark.read.parquet(dir).schema
-      val q = spark.readStream.schema(schema).parquet(dir)
+        .write.mode("overwrite").parquet(data)
+      val schema = spark.read.parquet(data).schema
+      val q = spark.readStream.schema(schema).parquet(data)
         .groupBy(col("k")).count()
         .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_warmup_stream").trigger(Trigger.AvailableNow()).start()
+        .queryName("graft_warmup_stream")
+        .option("checkpointLocation", new java.io.File(dir, "checkpoint").getPath)
+        .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     } catch { case _: Throwable => () }
+    finally {
+      spark.catalog.dropTempView("graft_warmup_stream")
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
   }
 
   /** Cross-query hygiene (r4 finding, see Bench main loop). */

@@ -229,7 +229,7 @@ object ValidationQueries {
     // tasks×partitions splinters on the read-back
     graft.sinks.PartitionedCsvSink.write(valid, tmp, Seq("opco_id"),
       singleFilePerGroup = true)
-    val back = spark.read.option("header", "true").csv(tmp)
+    val back = graft.sources.CsvSources.commaAllString(spark, tmp)
     back.groupBy(lpad(col("opco_id").cast(StringType), 3, "0").as("opco_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("supc").cast("long")).as("sum_supc"),
@@ -911,7 +911,7 @@ object ValidationQueries {
     }
     graft.streaming.PipelineStream.runPriceZoneStream(
       spark, inDir, outDir, ckptDir, activeOpcos, maxFilesPerTrigger = Some(1))
-    val back = spark.read.option("header", "true").csv(outDir)
+    val back = graft.sources.CsvSources.commaAllString(spark, outDir)
     back.groupBy(lpad(col("opco_id").cast(StringType), 3, "0").as("opco_id"))
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("supc")).as("n_supcs"),
@@ -996,7 +996,7 @@ object ValidationQueries {
     graft.streaming.PipelineStream.runPaStream(
       spark, inDir, outDir, ckptDir, mapping, activeOpcos,
       maxFilesPerTrigger = Some(1))
-    val back = spark.read.option("header", "true").csv(outDir)
+    val back = graft.sources.CsvSources.commaAllString(spark, outDir)
     back.groupBy(
         lpad(col("cluster").cast(StringType), 2, "0").as("cluster_id"),
         lpad(col("opco_id").cast(StringType), 3, "0").as("opco_id"))

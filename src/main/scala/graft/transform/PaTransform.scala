@@ -130,8 +130,8 @@ object PaTransform {
     * CSV per cluster (`pa_etl_script.py:104-296` distributed), each
     * cluster's directory overwritten. Returns (total record count,
     * invalid price count) — the metadata payload of
-    * `pa_etl_script.py:298-314`. Scans the input once after the header
-    * read (`ScanCountSpec`). */
+    * `pa_etl_script.py:298-314`. Scans the input once
+    * (`ScanCountSpec`). */
   def runFile(
       spark: SparkSession,
       inputPath: String,

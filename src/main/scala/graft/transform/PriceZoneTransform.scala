@@ -14,9 +14,9 @@ import graft.validate.{Rules, ValidationReport, ValidationRule, Validator}
   *   removal → derive typed columns → partitioned write.
   *
   * The reference runs ≥14 Spark jobs for validation plus 3 count scans;
-  * this plan reads the file twice after the header read: the report's
-  * summary collect, then the write, which removes failed groups with a
-  * filter over the keys the summary already collected (`ScanCountSpec`).
+  * this plan reads the file twice: the report's summary collect, then
+  * the write, which removes failed groups with a filter over the keys
+  * the summary already collected (`ScanCountSpec`).
   */
 object PriceZoneTransform {
 

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftListenerBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite (lazy). */
@@ -19,13 +22,37 @@ trait SparkSpec extends AnyFunSuite {
     * the next CREATE TABLE. Shared by the bucketing specs. */
   def dropManagedTables(tables: String*): Unit = tables.foreach { t =>
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val loc = new java.io.File(s"spark-warehouse/$t")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(loc)
+    deleteRecursively(new java.io.File(s"spark-warehouse/$t"))
+  }
+
+  def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(); ()
+  }
+
+  /** Runs `body` on a fresh temp directory and deletes it recursively
+    * afterwards, pass or fail. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath) finally deleteRecursively(dir)
+  }
+
+  /** Creates `root/name` (a spec that needs several directories takes
+    * them from one [[withTempDir]]). */
+  def mkdir(root: String, name: String): String =
+    Files.createDirectories(Paths.get(root, name)).toString
+
+  /** `body`'s result and the number of Spark jobs that started while it
+    * ran; the listener bus is drained on both sides, so events of
+    * earlier work are not counted and none of `body`'s are missed. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
+    GraftListenerBridge.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { val a = body; GraftListenerBridge.drain(spark); (a, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
   }
 }

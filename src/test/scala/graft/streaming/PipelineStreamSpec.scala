@@ -8,10 +8,10 @@ class PipelineStreamSpec extends SparkSpec {
   private def write(dir: String, name: String, body: String): Unit =
     Files.writeString(Paths.get(dir, name), body)
 
-  test("arriving csv files stream through validate -> partitioned layout") {
-    val in = Files.createTempDirectory("pzs_in").toString
-    val out = Files.createTempDirectory("pzs_out").toString
-    val ckpt = Files.createTempDirectory("pzs_ckpt").toString
+  test("arriving csv files stream through validate -> partitioned layout") { withTempDir("pzs") { root =>
+    val in = mkdir(root, "pzs_in")
+    val out = mkdir(root, "pzs_out")
+    val ckpt = mkdir(root, "pzs_ckpt")
 
     write(in, "f1.csv",
       """co_nbr,supc,prc_zone,cust_nbr,eff_from_dttm
@@ -52,15 +52,15 @@ class PipelineStreamSpec extends SparkSpec {
     assert(third.map(_.report.received).sum === 1)
     val back = spark.read.option("header", "true").csv(s"$out/batch_id=*/opco_id=019")
     assert(back.count() >= 2) // f1's 019 row + f3's row
-  }
+  } }
 
-  test("PA stream: one batch per file lands only its non-empty cluster, batch-scoped") {
+  test("PA stream: one batch per file lands only its non-empty cluster, batch-scoped") { withTempDir("pas") { root =>
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val in = Files.createTempDirectory("pas_in").toString
-    val out = Files.createTempDirectory("pas_out").toString
-    val ckpt = Files.createTempDirectory("pas_ckpt").toString
+    val in = mkdir(root, "pas_in")
+    val out = mkdir(root, "pas_out")
+    val ckpt = mkdir(root, "pas_ckpt")
     // file columns in the contract header order (Schemas.paRaw)
     val header = "ITEM_ID|PRICE_ZONE_ID|EFFECTIVE_DATE|LOCAL_REFERENCE_PRICE|EXPORT_DATE|ITEM_ATTR_5_NM|CURRENT_PRICE|REASON|NEW_PRICE"
     write(in, "pa_1.csv", s"""$header
@@ -86,15 +86,15 @@ class PipelineStreamSpec extends SparkSpec {
     val back = spark.read.option("header", "true").csv(out)
     assert(back.columns.toSet.contains("batch_id") && back.count() === 3)
     assert(new java.io.File(s"$out/cluster=01/${batches("01").head}/_SUCCESS").isFile)
-  }
+  } }
 
-  test("PA stream: a file whose header is out of contract order fails, not loads garbled") {
+  test("PA stream: a file whose header is out of contract order fails, not loads garbled") { withTempDir("pas_hdr") { root =>
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val in = Files.createTempDirectory("pas_hdr_in").toString
-    val out = Files.createTempDirectory("pas_hdr_out").toString
-    val ckpt = Files.createTempDirectory("pas_hdr_ckpt").toString
+    val in = mkdir(root, "pas_hdr_in")
+    val out = mkdir(root, "pas_hdr_out")
+    val ckpt = mkdir(root, "pas_hdr_ckpt")
     // the row's price is negative: bound by name it is 1 bad price, bound
     // by position PRICE_ZONE_ID would read "-1.5" and the price "2020-…"
     write(in, "pa_1.csv",
@@ -110,5 +110,5 @@ class PipelineStreamSpec extends SparkSpec {
       .map(t => String.valueOf(t.getMessage)).mkString("\n")
     assert(msgs.contains("CSV header does not conform to the schema"), msgs)
     assert(Option(new java.io.File(out).list()).forall(_.isEmpty))
-  }
+  } }
 }

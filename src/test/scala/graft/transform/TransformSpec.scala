@@ -11,12 +11,9 @@ import graft.SparkSpec
   */
 class TransformSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  test("price zone end-to-end: csv → validate → partitioned csv + report") {
-    val in = tmpDir("pz_in")
-    val out = tmpDir("pz_out")
+  test("price zone end-to-end: csv → validate → partitioned csv + report") { withTempDir("pz") { root =>
+    val in = mkdir(root, "pz_in")
+    val out = mkdir(root, "pz_out")
     val csv =
       """co_nbr,supc,prc_zone,cust_nbr,eff_from_dttm
         |019,1234567,5,104612,2020-08-06 00:00:00.000000
@@ -40,7 +37,7 @@ class TransformSpec extends SparkSpec {
     assert(back.columns.toSeq === Seq("supc", "price_zone", "customer_id", "effective_date"))
     val dates = back.select("effective_date").collect().map(_.getString(0)).toSet
     assert(dates === Set("2020-08-06 00:00:00")) // fraction stripped, seconds precision
-  }
+  } }
 
   test("price zone: zero valid records throws (transform_spark_job.py:94-95)") {
     val schema = StructType(Seq(
@@ -54,8 +51,8 @@ class TransformSpec extends SparkSpec {
     }
   }
 
-  test("pa transform: renames, date parse, epoch, composite key split, column order") {
-    val in = tmpDir("pa_in")
+  test("pa transform: renames, date parse, epoch, composite key split, column order") { withTempDir("pa") { root =>
+    val in = mkdir(root, "pa_in")
     val csv =
       """ITEM_ID|LOCAL_REFERENCE_PRICE|CURRENT_PRICE|REASON|NEW_PRICE|ITEM_ATTR_5_NM|EFFECTIVE_DATE|EXPORT_DATE|PRICE_ZONE_ID
         |9002908|22.68|1|r|2|N|2020-08-06 00:00:00|2020-08-05 12:30:45|018-5
@@ -74,12 +71,12 @@ class TransformSpec extends SparkSpec {
     assert(rows(0).getString(5) === "5" && rows(0).getString(6) === "018") // X9 split
 
     assert(PaTransform.invalidPriceCount(df) === 1L)         // F10: -1.5
-  }
+  } }
 
-  test("pa end-to-end: pipe csv → route → per-cluster partitioned csv + counts") {
+  test("pa end-to-end: pipe csv → route → per-cluster partitioned csv + counts") { withTempDir("pa_e2e") { root =>
     import scala.jdk.CollectionConverters._
-    val in = tmpDir("pa_e2e_in")
-    val outBase = tmpDir("pa_e2e_out")
+    val in = mkdir(root, "pa_e2e_in")
+    val outBase = mkdir(root, "pa_e2e_out")
     val csv =
       """ITEM_ID|LOCAL_REFERENCE_PRICE|CURRENT_PRICE|REASON|NEW_PRICE|ITEM_ATTR_5_NM|EFFECTIVE_DATE|EXPORT_DATE|PRICE_ZONE_ID
         |9002908|22.68|1|r|2|N|2020-08-06 00:00:00|2020-08-05 12:30:45|018-5
@@ -103,7 +100,7 @@ class TransformSpec extends SparkSpec {
     assert(back.columns.toSeq ===
       Seq("supc", "effective_date", "price", "export_date", "catch_weight_indicator", "price_zone_id"))
     assert(back.count() === 1)
-  }
+  } }
 
   private val paCsv =
     """ITEM_ID|LOCAL_REFERENCE_PRICE|CURRENT_PRICE|REASON|NEW_PRICE|ITEM_ATTR_5_NM|EFFECTIVE_DATE|EXPORT_DATE|PRICE_ZONE_ID
@@ -122,9 +119,9 @@ class TransformSpec extends SparkSpec {
 
   /** Runs `runFile` on [[paCsv]] over stale cluster directories; every
     * row is routed nowhere, so both clusters must come back empty. */
-  private def assertNothingRoutes(mapping: org.apache.spark.sql.DataFrame, active: Seq[String]): Unit = {
-    val in = tmpDir("pa_none_in")
-    val outBase = tmpDir("pa_none_out")
+  private def assertNothingRoutes(mapping: org.apache.spark.sql.DataFrame, active: Seq[String]): Unit = withTempDir("pa_none") { root =>
+    val in = mkdir(root, "pa_none_in")
+    val outBase = mkdir(root, "pa_none_out")
     Files.writeString(java.nio.file.Paths.get(in, "pa.csv"), paCsv)
     Files.createDirectories(java.nio.file.Paths.get(outBase, "cluster_01", "opco_id=999"))
     val (total, badPrice) = PaTransform.runFile(
@@ -151,9 +148,9 @@ class TransformSpec extends SparkSpec {
     assertNothingRoutes(mappingOf("030" -> "01", "031" -> "02"), active = Seq("018", "019", "022"))
   }
 
-  test("pa end-to-end: one write job lands both clusters and replaces stale output") {
-    val in = tmpDir("pa_both_in")
-    val outBase = tmpDir("pa_both_out")
+  test("pa end-to-end: one write job lands both clusters and replaces stale output") { withTempDir("pa_both") { root =>
+    val in = mkdir(root, "pa_both_in")
+    val outBase = mkdir(root, "pa_both_out")
     Files.writeString(java.nio.file.Paths.get(in, "pa.csv"), paCsv)
     Files.createDirectories(java.nio.file.Paths.get(outBase, "cluster_02", "opco_id=999"))
     val (total, badPrice) = PaTransform.runFile(
@@ -167,7 +164,7 @@ class TransformSpec extends SparkSpec {
     assert(spark.read.option("header", "true").csv(s"$outBase/cluster_01").count() === 2)
     // the staging directory is gone once the clusters are in place
     assert(new java.io.File(outBase).list().sorted.toSeq === Seq("cluster_01", "cluster_02"))
-  }
+  } }
 
   test("pa routing: cluster split + invalid-or-inactive bucket (J1)") {
     import scala.jdk.CollectionConverters._
