@@ -2,6 +2,7 @@ package graft.control
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.SparkSession
 
 /** S8 — archival file operations (SURVEY.md §2.1): copy-with-count
   * validation and recursive delete, the reference's post-run
@@ -9,13 +10,26 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
   * drivers `src/price_zone/data_backup_job.py:51-71`). Implemented on
   * the Hadoop `FileSystem` API so the same code runs against local
   * paths, HDFS, or any object-store connector on the cluster classpath.
+  *
+  * Without an explicit `conf`, each call uses the session's Hadoop
+  * configuration, so `spark.hadoop.*` settings (credentials, connector
+  * options) reach the archive step, and no call re-reads the XML
+  * resources a `new Configuration()` parses. Without a session there is
+  * one configuration, built on first use.
   */
 object ArchiveUtil {
+
+  private lazy val standaloneConf = new Configuration()
+
+  private def defaultConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(standaloneConf)
 
   private def fs(path: Path, conf: Configuration): FileSystem = path.getFileSystem(conf)
 
   /** Recursive file count under a prefix (dirs excluded). */
-  def countFiles(dir: String, conf: Configuration = new Configuration()): Long = {
+  def countFiles(dir: String, conf: Configuration = defaultConf): Long = {
     val p = new Path(dir)
     val f = fs(p, conf)
     if (!f.exists(p)) 0L
@@ -34,7 +48,7 @@ object ArchiveUtil {
     * `dst/<srcName>` when `dst` already exists as a directory, and at
     * `dst` otherwise — so pre-existing destination files can never mask
     * a partial copy. */
-  def archive(srcDir: String, dstDir: String, conf: Configuration = new Configuration()): Long = {
+  def archive(srcDir: String, dstDir: String, conf: Configuration = defaultConf): Long = {
     val src = new Path(srcDir)
     val dst = new Path(dstDir)
     val sfs = fs(src, conf)
@@ -53,7 +67,7 @@ object ArchiveUtil {
   }
 
   /** Recursive delete (`move_s3_objects.py:61-101`). */
-  def deleteRecursively(dir: String, conf: Configuration = new Configuration()): Boolean = {
+  def deleteRecursively(dir: String, conf: Configuration = defaultConf): Boolean = {
     val p = new Path(dir)
     val f = fs(p, conf)
     !f.exists(p) || f.delete(p, true)
@@ -61,7 +75,7 @@ object ArchiveUtil {
 
   /** Move = archive + delete source, the backup job's composition
     * (`data_backup_job.py:51-71`). */
-  def move(srcDir: String, dstDir: String, conf: Configuration = new Configuration()): Long = {
+  def move(srcDir: String, dstDir: String, conf: Configuration = defaultConf): Long = {
     val n = archive(srcDir, dstDir, conf)
     deleteRecursively(srcDir, conf)
     n

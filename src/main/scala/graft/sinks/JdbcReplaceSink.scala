@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.{Connection, PreparedStatement}
+import java.sql.{Connection, PreparedStatement, SQLException}
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** S6 — REPLACE-INTO bulk load (SURVEY.md §2.1). The reference bulk-loads
@@ -8,8 +8,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * audit columns from job args
   * (`/root/reference/src/price_zone/load_job.py:74-90`,
   * `/root/reference/src/pa/pa_etl_script.py:139-160`). Spark's JDBC
-  * writer has no upsert mode, so this sink issues batched
-  * `REPLACE INTO` statements from `foreachPartition`.
+  * writer has no upsert mode, so this sink sends batched statements
+  * from `foreachPartition`: `REPLACE INTO` on MySQL; elsewhere plain
+  * INSERTs, with conflict statements only once a key turns out to exist,
+  * as REPLACE deletes a row only when its key is already there.
   *
   * Semantics & retry safety: REPLACE = delete-then-insert on PK conflict
   * (MySQL dialect), which is row-idempotent — a Spark task retry replays
@@ -20,9 +22,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * Scale design: one connection per partition (not per row), batches of
   * `batchSize`, one commit per partition — REPLACE idempotency makes a
   * retried partition safe, so there is no need for mid-partition
-  * commits. `repartition(groupCols…)` upstream gives per-target
-  * parallel streams — the distributed replacement for the reference's
-  * one-thread file queue (`load_job.py:114`).
+  * commits. `repartition(keyCols…)` upstream gives per-target parallel
+  * streams — the distributed replacement for the reference's one-thread
+  * file queue (`load_job.py:114`) — and is required, see [[write]].
   */
 object JdbcReplaceSink {
 
@@ -32,13 +34,18 @@ object JdbcReplaceSink {
     *    `REPLACE INTO` statement, the server deletes-then-inserts on
     *    conflict.
     *  - [[DeleteThenInsert]]: portable ANSI form for engines without
-    *    REPLACE (Derby, Postgres, ...): an explicit DELETE-by-key batch
-    *    followed by an INSERT batch inside the same per-partition
-    *    transaction. Requires `keyColumns`. Rows in a statement batch
-    *    are deduplicated keeping the LAST occurrence per key, which is
-    *    exactly REPLACE's sequential final state (all deletes of a
-    *    chunk run before its inserts, so an in-chunk duplicate would
-    *    otherwise violate the PK on the second insert).
+    *    REPLACE (Derby, Postgres, ...). Requires `keyColumns`. Each
+    *    chunk of `batchSize` rows goes first as a plain INSERT batch
+    *    under a savepoint. If it fails with an integrity constraint
+    *    error (SQLState class 23, e.g. a key that already exists), the
+    *    sink rolls back to the savepoint and writes that chunk and every
+    *    later one of the partition as a DELETE-by-key batch followed by
+    *    an INSERT batch, so a full reload spends one failed INSERT batch
+    *    per partition. A driver whose metadata reports no savepoints
+    *    gets DELETE+INSERT for every chunk. Rows in a chunk are
+    *    deduplicated keeping the LAST occurrence per key, which is
+    *    exactly REPLACE's sequential final state (an in-chunk duplicate
+    *    would otherwise violate the PK on its second insert).
     *
     * Both are row-idempotent, so Spark task retries are safe. */
   sealed trait ReplaceDialect
@@ -55,9 +62,12 @@ object JdbcReplaceSink {
     *    statement (MySQL dialect, same server family as the
     *    reference's REPLACE).
     *  - [[UpdateThenInsert]]: portable ANSI form (Derby, Postgres
-    *    pre-9.5, ...): an UPDATE batch first, then INSERT exactly the
-    *    rows whose update matched nothing, inside the per-partition
-    *    transaction.
+    *    pre-9.5, ...). Inserts first like [[DeleteThenInsert]]; from
+    *    the first conflicting chunk on (or always, without savepoints)
+    *    it runs an UPDATE batch, then INSERTs exactly the rows whose
+    *    update matched nothing, which relies on the driver reporting
+    *    real update counts (Derby and Postgres do; MySQL should use
+    *    [[MySqlUpsert]]).
     *
     * Both require `keyColumns` and are row-idempotent (replaying a
     * partition converges to the same end state), so Spark task retries
@@ -152,183 +162,164 @@ object JdbcReplaceSink {
     s"DELETE FROM ${ansiIdent(cfg.table)} WHERE " +
       cfg.keyColumns.map(k => s"${ansiIdent(k)} = ?").mkString(" AND ")
 
-  /** INSERT statement for [[DeleteThenInsert]]. */
+  /** INSERT statement of the portable dialects. */
   def insertSql(cfg: Config): String = {
     val cols = (cfg.columns ++ cfg.auditColumns.map(_._1)).map(ansiIdent)
     val marks = Seq.fill(cols.size)("?")
     s"INSERT INTO ${ansiIdent(cfg.table)} (${cols.mkString(", ")}) VALUES (${marks.mkString(", ")})"
   }
 
-  /** Load one partition's rows through one connection. Returns rows
-    * written. Exposed for direct testing. */
-  def writePartition(rows: Iterator[Row], conn: Connection, cfg: Config): Long =
-    cfg.dialect match {
-      case MySqlReplace => writeSingleStatement(rows, conn, cfg, replaceSql(cfg))
-      case MySqlUpsert => writeSingleStatement(rows, conn, cfg, upsertSql(cfg))
-      case DeleteThenInsert => writeDeleteInsert(rows, conn, cfg)
-      case UpdateThenInsert => writeUpdateInsert(rows, conn, cfg)
-    }
-
-  /** Batched single-statement path shared by the MySQL dialects (the
-    * server resolves the conflict; REPLACE and ON DUPLICATE KEY UPDATE
-    * bind identically). */
-  private def writeSingleStatement(
-      rows: Iterator[Row], conn: Connection, cfg: Config, sql: String): Long = {
-    val stmt: PreparedStatement = conn.prepareStatement(sql)
-    val nData = cfg.columns.size
-    var inBatch = 0
-    var total = 0L
-    try {
-      conn.setAutoCommit(false)
-      rows.foreach { row =>
-        var i = 0
-        while (i < nData) {
-          stmt.setObject(i + 1, row.get(row.fieldIndex(cfg.columns(i))))
-          i += 1
-        }
-        cfg.auditColumns.zipWithIndex.foreach { case ((_, v), j) =>
-          stmt.setObject(nData + j + 1, v)
-        }
-        stmt.addBatch()
-        inBatch += 1
-        total += 1
-        if (inBatch >= cfg.batchSize) {
-          stmt.executeBatch()
-          inBatch = 0
-        }
-      }
-      if (inBatch > 0) stmt.executeBatch()
-      conn.commit()
-      total
-    } finally {
-      stmt.close()
-    }
-  }
-
-  /** Portable replace: per chunk of `batchSize` input rows, dedupe
-    * keeping the last occurrence per key (REPLACE's sequential final
-    * state), run the DELETE batch, then the INSERT batch; one commit
-    * per partition. Row-idempotent like REPLACE, so task retries are
-    * safe. Returns the INPUT row count (like the REPLACE dialect), not
-    * the post-dedup insert count — the two dialects must report the
-    * same number for the same partition. */
-  private def writeDeleteInsert(rows: Iterator[Row], conn: Connection, cfg: Config): Long = {
-    val del = conn.prepareStatement(deleteSql(cfg))
-    val ins = conn.prepareStatement(insertSql(cfg))
-    val nData = cfg.columns.size
+  /** Load one partition's rows through one connection, in chunks of
+    * `batchSize` (see [[ReplaceDialect]] for what each chunk sends), with
+    * one commit; the conflict statements are prepared on first use.
+    * Returns the INPUT row count, not the post-dedupe count, so every
+    * dialect reports the same number. Exposed for direct testing. */
+  def writePartition(rows: Iterator[Row], conn: Connection, cfg: Config): Long = {
+    val dialect = cfg.dialect
+    val keyed = dialect == DeleteThenInsert || dialect == UpdateThenInsert
+    val ins = conn.prepareStatement(dialect match {
+      case MySqlReplace => replaceSql(cfg)
+      case MySqlUpsert => upsertSql(cfg)
+      case _ => insertSql(cfg)
+    })
+    var onConflict: PreparedStatement = null
+    var insertFirst = keyed && supportsSavepoints(conn)
+    var bind: Binder = null
     var total = 0L
     try {
       conn.setAutoCommit(false)
       rows.grouped(cfg.batchSize).foreach { chunk =>
         total += chunk.size
-        // keep-last per key within the chunk. Byte-array key columns
-        // compare by reference, so wrap them value-comparable — without
-        // this, two byte-equal BINARY keys in one chunk both INSERT and
-        // trip the PK (a conflict REPLACE INTO would have absorbed).
-        def comparable(v: Any): Any = v match {
-          case b: Array[Byte] => b.toSeq
-          case x => x
-        }
-        val byKey = new scala.collection.mutable.LinkedHashMap[Seq[Any], Row]
-        chunk.foreach { row =>
-          val key = cfg.keyColumns.map(k => comparable(row.get(row.fieldIndex(k))))
-          byKey.remove(key)
-          byKey.put(key, row)
-        }
-        byKey.foreach { case (_, row) =>
-          // bind DELETE params from the ORIGINAL row values — the
-          // comparable-wrapped Seq is only a map key (setObject cannot
-          // bind a Scala Seq for a BINARY key column)
-          cfg.keyColumns.zipWithIndex.foreach { case (k, i) =>
-            del.setObject(i + 1, row.get(row.fieldIndex(k)))
+        if (bind == null) bind = new Binder(chunk.head, cfg)
+        if (!keyed) {
+          chunk.foreach(bind.insert(ins, _))
+          ins.executeBatch()
+        } else {
+          val last = bind.keepLast(chunk)
+          if (!(insertFirst && tryInsert(last, ins, bind, conn))) {
+            insertFirst = false
+            if (onConflict == null)
+              onConflict = conn.prepareStatement(
+                if (dialect == DeleteThenInsert) deleteSql(cfg) else updateSql(cfg))
+            if (dialect == DeleteThenInsert) {
+              last.foreach(bind.delete(onConflict, _))
+              onConflict.executeBatch()
+              last.foreach(bind.insert(ins, _))
+            } else {
+              last.foreach(bind.update(onConflict, _))
+              val counts = onConflict.executeBatch()
+              last.zip(counts).foreach { case (row, n) => if (n == 0) bind.insert(ins, row) }
+            }
+            ins.executeBatch()
           }
-          del.addBatch()
-          var i = 0
-          while (i < nData) {
-            ins.setObject(i + 1, row.get(row.fieldIndex(cfg.columns(i))))
-            i += 1
-          }
-          cfg.auditColumns.zipWithIndex.foreach { case ((_, v), j) =>
-            ins.setObject(nData + j + 1, v)
-          }
-          ins.addBatch()
         }
-        del.executeBatch()
-        ins.executeBatch()
       }
       conn.commit()
       total
     } finally {
-      del.close()
       ins.close()
+      if (onConflict != null) onConflict.close()
     }
   }
 
-  /** Portable upsert: per chunk, dedupe keeping the last occurrence per
-    * key (two same-key rows would otherwise both miss the UPDATE and
-    * collide on INSERT), run the UPDATE batch, then INSERT exactly the
-    * rows the driver reported as matching nothing. Update-in-place on
-    * hit — the conflicting row keeps its identity (no delete, no
-    * auto-increment churn), which is the semantic difference from
-    * [[DeleteThenInsert]]. Relies on the driver reporting real update
-    * counts (Derby and Postgres do; MySQL should use [[MySqlUpsert]]).
-    * Returns INPUT row count like every other dialect. */
-  private def writeUpdateInsert(rows: Iterator[Row], conn: Connection, cfg: Config): Long = {
-    val upd = conn.prepareStatement(updateSql(cfg))
-    val ins = conn.prepareStatement(insertSql(cfg))
-    val dataCols = cfg.columns
-    val nonKey = (dataCols ++ cfg.auditColumns.map(_._1)).filterNot(cfg.keyColumns.contains)
-    val auditVals = cfg.auditColumns.toMap
-    var total = 0L
+  /** One plain INSERT batch under a savepoint. False, with the batch's
+    * rows rolled back, when it hit an integrity constraint; any other
+    * error propagates. */
+  private def tryInsert(
+      rows: Seq[Row], ins: PreparedStatement, bind: Binder, conn: Connection): Boolean = {
+    val savepoint = conn.setSavepoint()
     try {
-      conn.setAutoCommit(false)
-      rows.grouped(cfg.batchSize).foreach { chunk =>
-        total += chunk.size
-        def comparable(v: Any): Any = v match {
-          case b: Array[Byte] => b.toSeq
-          case x => x
-        }
-        val byKey = new scala.collection.mutable.LinkedHashMap[Seq[Any], Row]
-        chunk.foreach { row =>
-          val key = cfg.keyColumns.map(k => comparable(row.get(row.fieldIndex(k))))
-          byKey.remove(key)
-          byKey.put(key, row)
-        }
-        val deduped = byKey.values.toSeq
-        deduped.foreach { row =>
-          var i = 0
-          nonKey.foreach { c =>
-            i += 1
-            upd.setObject(i,
-              auditVals.getOrElse(c, row.get(row.fieldIndex(c))))
-          }
-          cfg.keyColumns.foreach { k =>
-            i += 1
-            upd.setObject(i, row.get(row.fieldIndex(k)))
-          }
-          upd.addBatch()
-        }
-        val counts = upd.executeBatch()
-        deduped.zip(counts.toSeq).foreach { case (row, n) =>
-          if (n == 0) {
-            var i = 0
-            while (i < dataCols.size) {
-              ins.setObject(i + 1, row.get(row.fieldIndex(dataCols(i))))
-              i += 1
-            }
-            cfg.auditColumns.zipWithIndex.foreach { case ((_, v), j) =>
-              ins.setObject(dataCols.size + j + 1, v)
-            }
-            ins.addBatch()
-          }
-        }
-        ins.executeBatch()
+      rows.foreach(bind.insert(ins, _))
+      ins.executeBatch()
+      conn.releaseSavepoint(savepoint)
+      true
+    } catch {
+      case e: SQLException if violatesConstraint(e) =>
+        conn.rollback(savepoint)
+        ins.clearBatch()
+        false
+    }
+  }
+
+  private def supportsSavepoints(conn: Connection): Boolean =
+    try conn.getMetaData.supportsSavepoints
+    catch { case _: SQLException => false }
+
+  /** SQLState class 23 (integrity constraint violation: duplicate key,
+    * NOT NULL, ...) on the exception, its `getNextException` chain (where
+    * batch drivers put the failing statement's error) or its causes. */
+  private def violatesConstraint(e: Throwable): Boolean = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Throwable, java.lang.Boolean])
+    def walk(t: Throwable): Boolean = t != null && seen.add(t) && (t match {
+      case s: SQLException =>
+        Option(s.getSQLState).exists(_.startsWith("23")) ||
+          walk(s.getNextException) || walk(s.getCause)
+      case _ => walk(t.getCause)
+    })
+    walk(e)
+  }
+
+  /** Binds rows by position: the columns' indexes are looked up once per
+    * partition, from its first row's schema, not by name per value. */
+  private final class Binder(first: Row, cfg: Config) {
+    private val data = cfg.columns.map(first.fieldIndex).toArray
+    private val keys = cfg.keyColumns.map(first.fieldIndex).toArray
+    private val audit = cfg.auditColumns.map(_._2).toArray
+    /** [[updateSql]]'s SET list: an audit value, or a data column's index. */
+    private val sets: Array[Either[String, Int]] = {
+      val auditByName = cfg.auditColumns.toMap
+      (cfg.columns ++ cfg.auditColumns.map(_._1)).filterNot(cfg.keyColumns.contains)
+        .map(c => auditByName.get(c).toLeft(first.fieldIndex(c))).toArray
+    }
+
+    /** Data columns, then audit values: the INSERT, REPLACE and upsert row. */
+    def insert(st: PreparedStatement, row: Row): Unit = {
+      var i = 0
+      while (i < data.length) { st.setObject(i + 1, row.get(data(i))); i += 1 }
+      var j = 0
+      while (j < audit.length) { st.setObject(data.length + j + 1, audit(j)); j += 1 }
+      st.addBatch()
+    }
+
+    def delete(st: PreparedStatement, row: Row): Unit = {
+      bindKeys(st, row, 0)
+      st.addBatch()
+    }
+
+    def update(st: PreparedStatement, row: Row): Unit = {
+      var i = 0
+      while (i < sets.length) {
+        st.setObject(i + 1, sets(i) match { case Left(v) => v; case Right(c) => row.get(c) })
+        i += 1
       }
-      conn.commit()
-      total
-    } finally {
-      upd.close()
-      ins.close()
+      bindKeys(st, row, sets.length)
+      st.addBatch()
+    }
+
+    /** Binds the row's own key values: a byte-array key must reach
+      * `setObject` as the array, not as [[keepLast]]'s wrapper. */
+    private def bindKeys(st: PreparedStatement, row: Row, offset: Int): Unit = {
+      var k = 0
+      while (k < keys.length) { st.setObject(offset + k + 1, row.get(keys(k))); k += 1 }
+    }
+
+    /** The chunk with only the LAST row per key, ordered by those last
+      * occurrences: REPLACE's sequential final state. Byte-array keys
+      * compare by reference, so they are wrapped value-comparable;
+      * without this, two byte-equal BINARY keys in one chunk would both
+      * be inserted and trip the PK, a conflict REPLACE absorbs. */
+    def keepLast(chunk: Seq[Row]): Seq[Row] = {
+      val byKey = new scala.collection.mutable.LinkedHashMap[Seq[Any], Row]
+      chunk.foreach { row =>
+        val key = keys.toSeq.map(k => row.get(k) match {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        })
+        byKey.remove(key)
+        byKey.put(key, row)
+      }
+      byKey.values.toSeq
     }
   }
 
@@ -337,7 +328,15 @@ object JdbcReplaceSink {
     * failed partition is rolled back before its connection closes, so
     * the batch's own error surfaces (some drivers refuse to close a
     * connection with an open transaction); errors from the rollback or
-    * the close ride along as suppressed exceptions. */
+    * the close ride along as suppressed exceptions.
+    *
+    * For the keyed dialects, `df` must be partitioned on `keyColumns`
+    * (`repartition(n, keyCols…)`) so that no two concurrent partitions
+    * write one key; inserting first does not lift this. An INSERT that
+    * meets another task's uncommitted row with its key waits on that
+    * row's lock, and a fallback DELETE against such rows can close a
+    * lock cycle: an unkeyed 1M-row PA load deadlocked in Derby on every
+    * try on 4 cores (`perfbench/README.md`, "Known defect"). */
   def write(df: DataFrame, cfg: Config, connectionFactory: () => Connection): Unit =
     df.foreachPartition { rows: Iterator[Row] =>
       if (rows.nonEmpty) {

@@ -1,13 +1,20 @@
 package graft.control
 
 import java.nio.file.{Files, Paths}
-import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.atomic.AtomicInteger
+import graft.SparkSpec
+import org.apache.hadoop.fs.RawLocalFileSystem
+
+/** The local file system, counting its instances: a call reaches it only
+  * through a configuration that maps `fs.file.impl` to this class. */
+class CountingLocalFs extends RawLocalFileSystem { CountingLocalFs.made.incrementAndGet() }
+object CountingLocalFs { val made = new AtomicInteger }
 
 /** Truth-table port of the trigger classification tests
   * (`/root/reference/test/price_zone/test_etl_trigger_lambda.py:7-37`)
   * plus completion-state-machine and archive coverage.
   */
-class FileOpsSpec extends AnyFunSuite {
+class FileOpsSpec extends SparkSpec {
 
   private val partials = Seq("ctt", "itt")
   private val fulls = Seq("full_export", "monthly")
@@ -75,5 +82,22 @@ class FileOpsSpec extends AnyFunSuite {
     val n = ArchiveUtil.archive(src.toString, dst.toString)
     assert(n === 1)
     assert(ArchiveUtil.countFiles(dst.resolve(src.getFileName.toString).toString) === 1)
+  }
+
+  test("archive with no conf uses the session's Hadoop configuration") {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(hadoop.get(k)))
+    hadoop.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    hadoop.setBoolean("fs.file.impl.disable.cache", true)
+    try withTempDir("arch_session") { root =>
+      val src = mkdir(root, "src")
+      Files.writeString(Paths.get(src, "a.csv"), "1")
+      Files.createDirectories(Paths.get(src, "opco_id=019"))
+      Files.writeString(Paths.get(src, "opco_id=019", "b.csv"), "2")
+      val before = CountingLocalFs.made.get
+      assert(ArchiveUtil.archive(src, s"$root/backup") === 2)
+      assert(CountingLocalFs.made.get > before)
+      assert(Files.readString(Paths.get(root, "backup", "opco_id=019", "b.csv")) === "2")
+    } finally saved.foreach { case (k, v) => v.fold(hadoop.unset(k))(hadoop.set(k, _)) }
   }
 }

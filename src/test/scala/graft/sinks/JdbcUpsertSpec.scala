@@ -129,4 +129,41 @@ class JdbcUpsertSpec extends SparkSpec {
         dialect = JdbcReplaceSink.UpdateThenInsert, keyColumns = Seq("a", "b")) // nothing to SET
     }
   }
+
+  test("insert-first: a conflict in the second chunk updates that key in place, keeps the first chunk") {
+    val c = DerbyDb.conn()
+    createTable(c, "ups_second")
+    c.createStatement().execute(
+      "INSERT INTO ups_second (supc, customer_id, price_zone, arrived_time) VALUES (5, 50, 555, 'old')")
+    val before = dump(c, "ups_second")
+    val rec = new CountingJdbc(c)
+    JdbcReplaceSink.writePartition(
+      rows(Seq((1, 10, 1), (2, 20, 2), (3, 30, 3), (5, 50, 9), (6, 60, 6))),
+      rec.conn, cfg("ups_second", batchSize = 2))
+    // chunk 2's attempted (3, 30) was rolled back, so the UPDATE misses it and it is inserted
+    assert(rec.batches.toSeq === Seq(
+      "INSERT 2", "INSERT failed", "UPDATE 1", "INSERT 1", "UPDATE 0", "INSERT 1"))
+    assert(rec.prepared.count(_.startsWith("UPDATE")) === 1)
+    val after = dump(c, "ups_second")
+    assert(after.map { case (k, (_, v, _)) => k -> v } ===
+      Map((1, 10) -> 1, (2, 20) -> 2, (3, 30) -> 3, (5, 50) -> 9, (6, 60) -> 6))
+    assert(after((5, 50)) === ((before((5, 50))._1, 9, "2024-06-02 00:00:00")))
+    c.close()
+  }
+
+  test("insert-first: a full reload of 3 chunks fails one INSERT batch, then updates each chunk in place") {
+    val c = DerbyDb.conn()
+    createTable(c, "ups_reload")
+    val data = (1 to 6).map(i => (i, i * 10, i))
+    JdbcReplaceSink.writePartition(rows(data), c, cfg("ups_reload", batchSize = 2))
+    val before = dump(c, "ups_reload")
+    val rec = new CountingJdbc(c)
+    JdbcReplaceSink.writePartition(
+      rows(data.map { case (s, k, v) => (s, k, v + 100) }), rec.conn, cfg("ups_reload", batchSize = 2))
+    assert(rec.batches.toSeq === Seq("INSERT failed") ++ Seq.fill(3)(Seq("UPDATE 2", "INSERT 0")).flatten)
+    val after = dump(c, "ups_reload")
+    assert(after.keySet === before.keySet)
+    assert(after.forall { case (k, (id, v, _)) => id == before(k)._1 && v == before(k)._2 + 100 })
+    c.close()
+  }
 }
