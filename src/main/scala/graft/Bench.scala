@@ -92,16 +92,8 @@ object Bench {
     // full JSON string escaping — exception messages carry newlines and
     // tabs (AnalysisException embeds plans); a raw control char would
     // break the one-line machine-readable contract
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    import control.RunReport.jsonString
+    val errJson = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
       .mkString("{", ",", "}")
 
     // Isolated-wall pass (VERDICT r8 item 3): the one-JVM suite inflates

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.storage.StorageLevel
 
@@ -32,6 +33,10 @@ import org.apache.spark.storage.StorageLevel
   *    checkpoint directory (caller must `setCheckpointDir` to durable
   *    storage); survives executor loss, truncates lineage. Right for
   *    the heavy pins on very long jobs.
+  *
+  * A checkpointed frame (`local` and `reliable` pins, and every
+  * iterative pin) is freed through [[release]]: `Dataset.unpersist`
+  * does not reach the checkpoint's RDD and frees nothing.
   */
 object Pins {
 
@@ -62,6 +67,18 @@ object Pins {
       case "reliable" => df.checkpoint(eager)
       case _ => df.localCheckpoint(eager)
     }
+
+  /** Free a pin without blocking. A checkpointed frame is a scan of the
+    * checkpoint's RDD, so that RDD is unpersisted; a `persist`-mode
+    * fan-out pin is uncached. A `reliable` checkpoint's files stay until
+    * Spark's ContextCleaner removes them
+    * (`spark.cleaner.referenceTracking.cleanCheckpoints`). Call it only
+    * once no frame that will still run reads `df` through its lineage:
+    * an action must have materialized every pin built on top of it. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
+  }
 
   /** Broadcast hint gated on a row-count ceiling (r9 verdict item 1).
     *

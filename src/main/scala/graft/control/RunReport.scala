@@ -22,7 +22,10 @@ object RunReport {
 
   final case class Entry(runId: String, stage: String, fields: Map[String, String])
 
-  private def esc(s: String): String = s.flatMap {
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * char escaped, so one record stays one line. The one escaper for
+    * every JSON graft writes (run reports, `Bench`, `Verify`). */
+  def jsonString(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -30,11 +33,11 @@ object RunReport {
     case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
-  }
+  } + "\""
 
   def toJson(e: Entry): String = {
     val base = Seq("run_id" -> e.runId, "stage" -> e.stage) ++ e.fields.toSeq.sortBy(_._1)
-    base.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
+    base.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ", ", "}")
   }
 

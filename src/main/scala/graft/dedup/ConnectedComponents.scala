@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions._
   *  - no `collect_set` neighborhoods: per-node minima are computed with
   *    a map-side-combining `min` aggregate, so a skewed high-degree node
   *    costs one hot reduce key, not one giant in-memory array;
-  *  - `localCheckpoint` after each round truncates lineage (iterative
-  *    plans otherwise grow until planning dominates);
+  *  - the rounds run on [[graft.Fixpoint]]: each round is pinned,
+  *    which truncates lineage (iterative plans otherwise grow until
+  *    planning dominates), and the round it replaces is released once
+  *    the convergence aggregate has read the new one;
   *  - ids are any orderable type (string doc_ids included); the
   *    component label is the component's minimum id.
   *
@@ -76,30 +78,10 @@ object ConnectedComponents {
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 50): DataFrame = {
-    // lazy checkpoints: eager localCheckpoint() runs its own job, then
-    // the convergence aggregate runs a second one — lazy lets the
-    // aggregate action materialize the checkpoint, one job per round
-    var cur = graft.Pins.pinIterative(canonical(edges, srcCol, dstCol))
-    var last: Option[(Long, Long)] = None
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      val next = graft.Pins.pinIterative(smallStar(largeStar(cur)))
-      // stable (count, order-insensitive checksum) ⇒ the star transforms
-      // are at fixpoint; xxhash64 is engine-internal only (never oracled).
-      // bit_xor, not sum: xor never overflows (ANSI mode makes a long
-      // overflow in sum a hard error)
-      val chkRow = next
-        .agg(count(lit(1)).as("c"),
-          coalesce(bit_xor(xxhash64(col("lo"), col("hi"))), lit(0L)).as("h"))
-        .head()
-      val chk = (chkRow.getLong(0), chkRow.getLong(1))
-      cur.unpersist()
-      cur = next
-      converged = last.contains(chk)
-      last = Some(chk)
-      it += 1
-    }
+    // a stable (count, checksum) of the edge set means the star
+    // transforms are at their fixpoint
+    val (cur, _) = graft.Fixpoint.untilStable(canonical(edges, srcCol, dstCol), maxIter)(
+      graft.Fixpoint.signature("lo", "hi"))(e => smallStar(largeStar(e)))
     // fixpoint edge set is a star forest: (component-min, member)
     val members = cur.select(col("hi").as("id"), col("lo").as("component"))
     val roots = cur.select(col("lo")).distinct()

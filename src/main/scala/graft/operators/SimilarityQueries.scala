@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, ShortType}
 import graft.Tables
 import graft.similarity.Similarity
 
@@ -595,11 +596,12 @@ object SimilarityQueries {
   // "isolated keeps its own label" inside the same majority aggregate,
   // no per-round left-join fallback. Iteration discipline is d5's CC
   // pattern: the edge list checkpoints once (vectors never shuffle
-  // after that — per round only (vec_id, label) pairs move), each
-  // round's state lazily localCheckpoints (truncating lineage — on a
-  // cluster this is checkpoint-to-storage), and the driver sees ONE
-  // scalar pair per round (the CC-style (count, checksum) fixpoint
-  // test — no flip-count join against the previous state). Output pins
+  // after that — per round only (vec_id, label) pairs move), the rounds
+  // run on graft.Fixpoint (each round's state a lazy iterative pin, the
+  // round it replaces released once the next one is tested), and the
+  // driver sees ONE scalar pair per round (the CC-style (count,
+  // checksum) fixpoint test — no flip-count join against the previous
+  // state) plus the edge count that picks the majority. Output pins
   // the whole trajectory: per-vector initial + fixpoint label and the
   // converged round count.
   /** The propagation loop behind s12, reusable on any (labels, edges)
@@ -626,15 +628,12 @@ object SimilarityQueries {
     // off the codegen hash-agg fast path); the packed key is
     // fixed-width, so it stays on it. Non-integral labels (spec
     // fixtures propagate strings) keep the window form — both paths
-    // are fixture-pinned in LabelPropFixpointSpec.
-    val packable = lbl.schema("label").dataType match {
-      case org.apache.spark.sql.types.IntegerType => true
-      case org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
+    // are fixture-pinned in LabelPropFixpointSpec. Counting the edge
+    // pin materializes it, which round 1 would do anyway.
     val labelType = lbl.schema("label").dataType
+    val packed = packedMajority(labelType, edges.count())
     def majority(votes: DataFrame): DataFrame =
-      if (packable)
+      if (packed)
         votes
           .groupBy(col("vec_id"))
           .agg(max(col("c") * lit(4294967296L) +
@@ -647,42 +646,36 @@ object SimilarityQueries {
         votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("vec_id"), col("nl").as("label"))
       }
-    var state = lbl.transform(graft.Pins.pinIterative(_))
     // r10: convergence via the CC discipline — stable (count,
-    // order-insensitive checksum) over `next` ⇔ zero flips (every
-    // vec_id labels every round: iso self-edges guarantee it, so the
-    // multiset of (vec_id, label) rows is equal iff no label moved).
-    // One aggregate over node-cardinality rows replaces the per-round
-    // next⋈state flip-count join (a second state scan + shuffle per
-    // round); same n_rounds by construction. xxhash64 is
-    // engine-internal only (never oracled); bit_xor never overflows.
-    def checksum(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)).as("c"),
-        coalesce(bit_xor(xxhash64(col("vec_id"), col("label"))), lit(0L)).as("h"))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var last = checksum(state)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = majority(edges
+    // order-insensitive checksum) ⇔ zero flips (every vec_id labels
+    // every round: iso self-edges guarantee it, so the multiset of
+    // (vec_id, label) rows is equal iff no label moved). One aggregate
+    // over node-cardinality rows replaces a per-round next⋈state
+    // flip-count join; same n_rounds by construction.
+    val (state, rounds) = graft.Fixpoint.untilStable(lbl, maxRounds)(
+      graft.Fixpoint.signature("vec_id", "label")) { state =>
+      majority(edges
         .join(state.select(col("vec_id").as("nbr_id"), col("label").as("nl")),
           Seq("nbr_id"))
         .groupBy(col("vec_id"), col("nl")).agg(count(lit(1)).as("c")))
-        .transform(graft.Pins.pinIterative(_))
-      val chk = checksum(next) // also materializes next's pin
-      state.unpersist()
-      state = next
-      rounds += 1
-      converged = chk == last
-      last = chk
     }
+    graft.Pins.release(edges) // only the rounds read it, and the last one is materialized
     lbl.select(col("vec_id"), col("label").as("init_label"))
       .join(state.select(col("vec_id"), col("label").as("final_label")), Seq("vec_id"))
       .withColumn("n_rounds", lit(rounds))
       .orderBy(col("vec_id"))
   }
+
+  /** Whether the label-propagation majority may use the packed-long
+    * key c·2³² + (2³¹−1 − label). That key is exact for labels of at
+    * most 32 bits and vote counts c below 2³¹; a (vec_id, label) vote
+    * count never exceeds the edge frame's row count `edgeRows`, which is
+    * evaluated only for a packable label type. */
+  private[operators] def packedMajority(labelType: DataType, edgeRows: => Long): Boolean =
+    labelType match {
+      case IntegerType | ShortType | ByteType => edgeRows < (1L << 31)
+      case _ => false
+    }
 
   def s12(spark: SparkSession, dir: String): DataFrame =
     propagateToFixpoint(
@@ -767,16 +760,15 @@ object SimilarityQueries {
     val deg = edges.groupBy(col("vec_id")).agg(count(lit(1)).as("deg"))
     val ed = edges.join(deg, Seq("vec_id")).transform(graft.Pins.pinForFanout(_))
     val base = 15L * S / (100L * nv)
-    var rank = nodeIds.select(col("vec_id"), lit(S / nv).as("rank"))
-    for (_ <- 1 to iters) {
+    val rank = graft.Fixpoint.iterate(
+        nodeIds.select(col("vec_id"), lit(S / nv).as("rank")), iters) { rank =>
       val contrib = ed.join(rank, Seq("vec_id"))
         .select(col("nbr_id").as("vec_id"), expr("rank div deg").as("c"))
         .groupBy(col("vec_id")).agg(sum(col("c")).as("m"))
-      rank = nodeIds
+      nodeIds
         .join(contrib, Seq("vec_id"), "left")
         .select(col("vec_id"),
           (lit(base) + expr("(85 * coalesce(m, 0)) div 100")).as("rank"))
-        .transform(graft.Pins.pinIterative(_))
     }
     rank.select(col("vec_id"), col("rank").as("rank_scaled"))
   }
@@ -973,16 +965,13 @@ object SimilarityQueries {
       .unionAll(edges.select(col("nbr_id").as("vec_id"), col("vec_id").as("nbr_id")))
       .distinct()
       .transform(graft.Pins.pinForFanout(_))
-    var state = nodes.filter(seed)
-      .select(col("vec_id"), lit(0L).as("dist"))
-      .transform(graft.Pins.pinIterative(_))
-    for (_ <- 1 to rounds) {
-      state = sym
+    val state = graft.Fixpoint.iterate(
+        nodes.filter(seed).select(col("vec_id"), lit(0L).as("dist")), rounds) { state =>
+      sym
         .join(state.select(col("vec_id"), col("dist")), Seq("vec_id"))
         .select(col("nbr_id").as("vec_id"), (col("dist") + 1L).as("dist"))
         .unionAll(state)
         .groupBy(col("vec_id")).agg(min(col("dist")).as("dist"))
-        .transform(graft.Pins.pinIterative(_))
     }
     nodes.select(col("vec_id"))
       .join(state, Seq("vec_id"), "left")
@@ -1043,17 +1032,15 @@ object SimilarityQueries {
           (greatest(col("vec_id"), col("nbr_id")) % 67108864) * lit(40503L),
         lit(9L)))
       .transform(graft.Pins.pinForFanout(_))
-    var state = Tables.embeddings(spark, dir)
+    val seeds = Tables.embeddings(spark, dir)
       .select(col("vec_id")).filter(col("vec_id") % 97 === 0)
       .select(col("vec_id"), lit(0L).as("dist"))
-      .transform(graft.Pins.pinIterative(_))
-    for (_ <- 1 to 6) {
-      state = sym
+    val state = graft.Fixpoint.iterate(seeds, 6) { state =>
+      sym
         .join(state.select(col("vec_id"), col("dist")), Seq("vec_id"))
         .select(col("nbr_id").as("vec_id"), (col("dist") + col("w")).as("dist"))
         .unionAll(state)
         .groupBy(col("vec_id")).agg(min(col("dist")).as("dist"))
-        .transform(graft.Pins.pinIterative(_))
     }
     Tables.embeddings(spark, dir).select(col("vec_id"))
       .join(state, Seq("vec_id"), "left")
@@ -1112,17 +1099,15 @@ object SimilarityQueries {
       .transform(graft.Pins.pinForFanout(_))
     val nodes = Tables.embeddings(spark, dir).select(col("vec_id"))
     val seeds = nodes.filter(col("vec_id") % 97 === 0)
-    var state = seeds.select(col("vec_id"), lit(1000000L).as("mass"))
-      .transform(graft.Pins.pinIterative(_))
-    for (_ <- 1 to 4) {
+    val state = graft.Fixpoint.iterate(
+        seeds.select(col("vec_id"), lit(1000000L).as("mass")), 4) { state =>
       val spread = symd.join(state, Seq("vec_id"))
         .select(col("nbr_id").as("vec_id"),
           expr("(mass * 3) div (4 * d)").as("m"))
-      state = spread
+      spread
         .unionAll(seeds.select(col("vec_id"), lit(250000L).as("m")))
         .groupBy(col("vec_id")).agg(sum(col("m")).as("mass"))
         .filter(col("mass") > 0)
-        .transform(graft.Pins.pinIterative(_))
     }
     nodes.join(state, Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("mass"), lit(0L)).as("mass_ppm"))
@@ -1201,6 +1186,8 @@ object SimilarityQueries {
       .select(col("vec_id"), col("sv"),
         col("best.dist").as("dist"), col("best.cid").as("cid"))
     var assigned: DataFrame = null
+    // not on graft.Fixpoint: each round carries two frames (assigned,
+    // cents) and the helper carries one; the rounds are lazy, so no in-loop free
     for (_ <- 1 to 3) {
       assigned = assign(cents).transform(graft.Pins.pinIterative(_))
       cents = assigned
@@ -1346,7 +1333,9 @@ object SimilarityQueries {
   // are no-ops. Engine loop = one degree aggregate + one filter per
   // round over the k-bounded edge list (edges checkpoint ONCE, node
   // sets are the only per-round state — vec-cardinality scalars, never
-  // vectors), convergence = a 1-row removed-count scalar, round cap 8.
+  // vectors), convergence = an unchanged survivor count (graft.Fixpoint
+  // frees each replaced round once that count has read its successor),
+  // round cap 8.
   // At 100 TB the per-round cost is O(edges) with the k-bounded fanout,
   // and the cap bounds total work at 8 passes.
   def s22(spark: SparkSession, dir: String): DataFrame = {
@@ -1364,28 +1353,15 @@ object SimilarityQueries {
       kCore: Int, maxRounds: Int): DataFrame = {
     val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b"))).distinct()
       .transform(graft.Pins.pinForFanout(_))
-    var surv = und.select(col("a").as("node")).distinct()
-      .transform(graft.Pins.pinIterative(_))
-    // carry the survivor count forward: the old `surv.count() -
-    // next.count()` re-counted the PREVIOUS round's frame every round
-    // (an extra job + cached scan) when that number is exactly what
-    // last round's next.count() returned
-    var survN = surv.count() // materializes the seed pin
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = und
+    // peeling only shrinks the survivor set, so an unchanged survivor
+    // count is the fixpoint: 1 driver scalar per round
+    val (surv, _) = graft.Fixpoint.untilStable(
+        und.select(col("a").as("node")).distinct(), maxRounds)(_.count()) { surv =>
+      und
         .join(surv.select(col("node").as("a")), Seq("a"))
         .join(surv.select(col("node").as("b")), Seq("b"))
         .groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= kCore).select(col("node"))
-        .transform(graft.Pins.pinIterative(_))
-      val nextN = next.count() // 1 driver scalar per round
-      surv.unpersist()
-      surv = next
-      rounds += 1
-      converged = nextN == survN
-      survN = nextN
     }
     val coreDeg = und
       .join(surv.select(col("node").as("a")), Seq("a"))
@@ -1469,6 +1445,8 @@ object SimilarityQueries {
       .select(col("vec_id"), expr("1000000000000 div nn").as("w"))
       .transform(graft.Pins.pinIterative(_))
     var auth: DataFrame = null
+    // not on graft.Fixpoint: each round carries two frames (hub, auth)
+    // and the helper carries one; the rounds are lazy, so no in-loop free
     for (_ <- 1 to rounds) {
       // r10: ar/hr each feed TWO consumers — the node left-join AND the
       // 1-row renorm aggregate, which rides a BroadcastExchange and so
@@ -2537,19 +2515,16 @@ object SimilarityQueries {
     // scan + bucket aggregate) re-executed once per consumer per round:
     // 8 duplicate parquet scans in the executed plan. Beam width ≤
     // max(#buckets, 8) rows — the cheapest pin in the engine.
-    var beam = v.groupBy(col("bucket")).agg(min(col("vec_id")).as("id"))
-      .select(col("id"))
-      .transform(graft.Pins.pinIterative(_))
-    for (_ <- 1 to 3) {
+    val beam = graft.Fixpoint.iterate(
+        v.groupBy(col("bucket")).agg(min(col("vec_id")).as("id")).select(col("id")), 3) { beam =>
       val cand = beam
         .unionAll(und.join(broadcast(beam), col("a") === col("id"))
           .select(col("b").as("id")))
         .distinct()
-      beam = cand.filter(col("id") =!= 0)
+      cand.filter(col("id") =!= 0)
         .join(scored, col("id") === col("vec_id"))
         .orderBy(col("skey").desc, col("id")).limit(8)
         .select(col("id"))
-        .transform(graft.Pins.pinIterative(_))
     }
     val fin = beam.join(scored, col("id") === col("vec_id"))
       .select(col("id"), col("skey"))
@@ -2702,16 +2677,16 @@ object SimilarityQueries {
     val n = nodes.count() // driver scalar: node count (bounded by design)
     val rounds = if (n <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n - 1L)
     def f(c: org.apache.spark.sql.Column) = (c * c + lit(7L)) % lit(n) + lit(1L)
-    var st = nodes
-      .select(col("v"), f(col("v")).as("next"), f(col("v")).as("mn"))
-      .transform(graft.Pins.pinIterative(_, eager = true)) // truncate before the doubling chain starts
-    for (_ <- 1 to rounds.toInt) {
+    // eager pins: each round materializes before the next joins it
+    // with itself, so the round it replaces is freed at once
+    val st = graft.Fixpoint.iterate(
+        nodes.select(col("v"), f(col("v")).as("next"), f(col("v")).as("mn")),
+        rounds, eager = true) { st =>
       val b = st.select(col("v").as("bv"), col("next").as("bnext"),
         col("mn").as("bmn"))
-      st = st.join(b, col("next") === col("bv"))
+      st.join(b, col("next") === col("bv"))
         .select(col("v"), col("bnext").as("next"),
           least(col("mn"), col("bmn")).as("mn"))
-        .transform(graft.Pins.pinIterative(_, eager = true)) // materialize the round, cut lineage
     }
     // cycle nodes = image of f^(2^R); each carries its cycle min as mn
     val cyc = st.join(

@@ -1,23 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skyline (Pareto-dominance) operator — a maximize-all-dimensions
   * skyline: keep rows no other row dominates (≥ on every dim, > on at
   * least one). Spark has no native skyline (cf. "Integration of Skyline
-  * Queries into Spark SQL", EDBT 2023, in PAPERS.md); two composed
-  * forms:
-  *
-  *  - [[antiJoin]] — declarative: a non-equi LEFT ANTI self-join
-  *    (BroadcastNestedLoopJoin). O(n²) predicate work: right for
-  *    dimension-sized inputs (aggregated stats), oracle-expressible as
-  *    NOT EXISTS.
-  *  - [[twoPhase]] — scalable: per-partition local skylines via
-  *    mapPartitions (dominated rows never leave their partition), then
-  *    the global skyline over the union of local candidates. Local
-  *    skylines shrink n² to |candidates|²; the classic distributed
-  *    skyline shape for data too big to self-join.
+  * Queries into Spark SQL", EDBT 2023, in PAPERS.md). [[antiJoin]] is
+  * declarative: a non-equi LEFT ANTI self-join
+  * (BroadcastNestedLoopJoin). O(n²) predicate work: right for
+  * dimension-sized inputs (aggregated stats), oracle-expressible as
+  * NOT EXISTS.
   */
 object Skyline {
 
@@ -30,37 +23,4 @@ object Skyline {
   /** Anti-join skyline: rows not dominated by any other row. */
   def antiJoin(df: DataFrame, dims: Seq[String]): DataFrame =
     df.alias("x").join(df.alias("y"), dominates("y", "x", dims), "left_anti")
-
-  /** In-memory dominance scan used per partition and for the final
-    * reduce. Quadratic in the partition's row count — callers bound it. */
-  private def localSkyline(rows: Iterator[Row], dimIdx: Seq[Int]): Iterator[Row] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    rows.foreach { r =>
-      def dom(a: Row, b: Row): Boolean = {
-        var geAll = true
-        var gtAny = false
-        dimIdx.foreach { i =>
-          val x = a.getDouble(i); val y = b.getDouble(i)
-          if (x < y) geAll = false
-          if (x > y) gtAny = true
-        }
-        geAll && gtAny
-      }
-      if (!buf.exists(k => dom(k, r))) {
-        val survivors = buf.filterNot(k => dom(r, k))
-        buf.clear(); buf ++= survivors; buf += r
-      }
-    }
-    buf.iterator
-  }
-
-  /** Two-phase distributed skyline. Dimensions must be DoubleType. */
-  def twoPhase(df: DataFrame, dims: Seq[String]): DataFrame = {
-    val schema = df.schema
-    val dimIdx = dims.map(schema.fieldIndex)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val local = df.mapPartitions(rows => localSkyline(rows, dimIdx))(enc)
-    // global pass over the (small) candidate union
-    local.coalesce(1).mapPartitions(rows => localSkyline(rows, dimIdx))(enc)
-  }
 }

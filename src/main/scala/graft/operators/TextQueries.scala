@@ -890,6 +890,8 @@ object TextQueries {
       .persist()
     try {
       var toks = vocab
+      // not on graft.Fixpoint: the rounds are map-only replaces over the
+      // persisted vocabulary and pin nothing
       for (_ <- 1 to 3) {
         val top = toks
           .select(split(trim(col("s"), x1 + x2), x2 + x1).as("syms"), col("w"))

@@ -1048,6 +1048,8 @@ object TpchQueries {
     val up = edges.select(col("child").as("jc"), col("parent").as("jp"),
       col("qty").as("jq"))
     var open = true
+    // not on graft.Fixpoint: every closure slice feeds the final union,
+    // so no round is freed, and `isEmpty` may read only some partitions
     while (open) {
       val next = frontier.join(up, frontier("anc") === col("jc"))
         .select(col("child"), col("jp").as("anc"),

@@ -22,8 +22,8 @@ class RunReportSpec extends AnyFunSuite {
   }
 
   test("json escaping survives quotes and control chars") {
-    val e = RunReport.Entry("r", "s", Map("msg" -> "a\"b\\c\nd\te"))
+    val e = RunReport.Entry("r", "s", Map("msg" -> "a\"b\\c\nd\te\rf\u0001g"))
     val j = RunReport.toJson(e)
-    assert(j.contains("""a\"b\\c\nd\te"""))
+    assert(j.contains("""a\"b\\c\nd\te\rf""" + "\\u0001g"))
   }
 }

@@ -98,6 +98,14 @@ class LabelPropFixpointSpec extends SparkSpec {
     assert(neg.find(_._1 == 3L).map(_._3) === Some(-5))
   }
 
+  test("packed majority only while the edge count bounds every vote count below 2^31") {
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    assert(SimilarityQueries.packedMajority(IntegerType, (1L << 31) - 1))
+    assert(!SimilarityQueries.packedMajority(IntegerType, 1L << 31))
+    assert(!SimilarityQueries.packedMajority(StringType,
+      fail("a string label must not count the edges")))
+  }
+
   test("packed majority plan has no window — two hash aggregates only (s11)") {
     val plan = SimilarityQueries
       .s11(spark, "/root/testdata/sf0.001").queryExecution.sparkPlan

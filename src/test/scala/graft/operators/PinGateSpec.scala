@@ -92,11 +92,15 @@ class PinGateSpec extends SparkSpec {
     val saved = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(ckpt.toString)
     try {
-      val local = canon(gate("x30_abc_pareto"))
-      val reliable = withConf("spark.graft.pin.mode" -> "reliable") {
-        canon(gate("x30_abc_pareto"))
+      // x30: fan-out pins; s12: lazy Fixpoint rounds; s37: eager ones
+      Seq("x30_abc_pareto", "s12_label_prop_fixpoint", "s37_pointer_doubling").foreach { name =>
+        val local = canon(gate(name))
+        val reliable = withConf("spark.graft.pin.mode" -> "reliable") {
+          canon(gate(name))
+        }
+        assert(local.nonEmpty, s"$name produced no rows")
+        assert(local == reliable, s"$name diverged under pin.mode=reliable")
       }
-      assert(local == reliable)
     } finally {
       // restore the previous dir (null clears it): later specs must not
       // write into the deleted temp dir

@@ -59,8 +59,7 @@ class PlanRegressionSpec extends SparkSpec {
     "x11_gapfill" -> 1,       // distinct event_type dim: 5 rows
     "q34_frequent_pairs" -> 1, // 1-row basket-count aggregate (lift denom)
     "x4_skyline" -> 1,        // dominance anti-join over per-customer
-                              // aggregates (dimension-sized by design;
-                              // Skyline.twoPhase is the big-input path)
+                              // aggregates (dimension-sized by design)
     "v15_benford" -> 1,       // 1-row total-count aggregate (ppm denom)
     "s20_modularity" -> 1,    // 1-row edge-count aggregate (2m denom)
     "v16_anomaly_mad" -> 3,   // 1-row median + MAD scalar frames (the

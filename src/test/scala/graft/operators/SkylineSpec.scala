@@ -19,25 +19,4 @@ class SkylineSpec extends SparkSpec {
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got === Seq(1L, 2L, 3L, 5L))
   }
-
-  test("two-phase distributed skyline equals the anti-join form") {
-    val expected = Skyline.antiJoin(pts, Seq("a", "b"))
-      .select("id").collect().map(_.getLong(0)).toSet
-    val got = Skyline.twoPhase(pts.repartition(3), Seq("a", "b"))
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(got === expected)
-  }
-
-  test("two-phase equals anti-join on real aggregated data") {
-    val stats = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .groupBy($"o_custkey")
-      .agg(RelationalQueries.dsum($"o_totalprice").as("spend"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).cast("double").as("n_orders"))
-    val a = Skyline.antiJoin(stats, Seq("spend", "n_orders"))
-      .select("o_custkey").collect().map(_.getLong(0)).toSet
-    val b = Skyline.twoPhase(stats.repartition(4), Seq("spend", "n_orders"))
-      .select("o_custkey").collect().map(_.getLong(0)).toSet
-    assert(a === b && a.nonEmpty)
-  }
 }

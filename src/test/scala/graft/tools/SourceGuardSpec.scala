@@ -4,11 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guards for the two single paths the engine keeps:
-  * every session comes from [[graft.BenchSupport.session]] (so a tool's
-  * number is a number the bench would give), and every materialization
-  * pin goes through [[graft.Pins]] (so `spark.graft.pin.mode` reaches
-  * it). Comment lines are skipped: scaladoc may show the raw calls. */
+/** Source-level guards for the single paths the engine keeps: every
+  * session comes from [[graft.BenchSupport.session]] (so a tool's number
+  * is a number the bench would give), every materialization pin goes
+  * through [[graft.Pins]] (so `spark.graft.pin.mode` reaches it), and
+  * every round-carrying loop runs on [[graft.Fixpoint]] (so each round
+  * is pinned and the round it replaces freed in one place). Comment
+  * lines are skipped: scaladoc may show the raw calls. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -35,6 +37,30 @@ class SourceGuardSpec extends AnyFunSuite {
       case (f, n, line) if bad(line) && f != allowedFile => s"$f:$n: ${line.trim}"
     }
 
+  private val memberDef = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+
+  /** (file, enclosing object member) of every code line that calls
+    * `pinIterative(` outside the two files that own it. */
+  private lazy val iterativePins: Seq[((String, String), String)] = {
+    val owner = scala.collection.mutable.Map.empty[String, String]
+    codeLines.flatMap { case (f, n, line) =>
+      line match {
+        case memberDef(name) => owner(f) = name
+        case _ =>
+      }
+      if (line.contains("pinIterative(") &&
+          f != "graft/Pins.scala" && f != "graft/Fixpoint.scala")
+        Some((f, owner.getOrElse(f, "")) -> s"$f:$n: ${line.trim}")
+      else None
+    }
+  }
+
+  /** Loops that keep their own rounds; each states why at the loop. */
+  private val ownLoops = Set(
+    "graft/operators/SimilarityQueries.scala" -> "hitsOf", // two frames per round
+    "graft/operators/SimilarityQueries.scala" -> "s19", // k-means: two frames per round
+    "graft/operators/TpchQueries.scala" -> "q74") // keeps every round for its union
+
   test("the source tree is where the guards look") {
     assert(codeLines.exists(_._1 == "graft/BenchSupport.scala"))
     assert(codeLines.exists(_._1 == "graft/Pins.scala"))
@@ -49,5 +75,12 @@ class SourceGuardSpec extends AnyFunSuite {
     val hits = offenders(l => l.contains("localCheckpoint(") || l.contains(".checkpoint("),
       "graft/Pins.scala")
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("pinIterative( only in Pins, Fixpoint and the named loops") {
+    val hits = iterativePins.collect { case (loop, at) if !ownLoops(loop) => at }
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val stale = ownLoops -- iterativePins.map(_._1)
+    assert(stale.isEmpty, s"named loops without an iterative pin: $stale")
   }
 }
