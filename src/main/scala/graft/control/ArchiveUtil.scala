@@ -44,10 +44,10 @@ object ArchiveUtil {
   /** Copy a prefix tree and validate the destination file count matches
     * the source (the reference's copy-validation contract,
     * `move_s3_objects.py:33-58`). Throws on mismatch. Counts only the
-    * copied subtree — Hadoop's `FileUtil.copy` lands the tree at
-    * `dst/<srcName>` when `dst` already exists as a directory, and at
-    * `dst` otherwise — so pre-existing destination files can never mask
-    * a partial copy. */
+    * copied file or subtree — Hadoop's `FileUtil.copy` lands a file or
+    * a tree at `dst/<srcName>` when `dst` already exists as a directory,
+    * and at `dst` otherwise — so files archived there before can never
+    * mask a partial copy, and no call lists the rest of `dst`. */
   def archive(srcDir: String, dstDir: String, conf: Configuration = defaultConf): Long = {
     val src = new Path(srcDir)
     val dst = new Path(dstDir)
@@ -55,8 +55,7 @@ object ArchiveUtil {
     val dfs = fs(dst, conf)
     val expected = countFiles(srcDir, conf)
     val copyRoot =
-      if (dfs.exists(dst) && dfs.getFileStatus(dst).isDirectory && sfs.getFileStatus(src).isDirectory)
-        new Path(dst, src.getName)
+      if (dfs.exists(dst) && dfs.getFileStatus(dst).isDirectory) new Path(dst, src.getName)
       else dst
     FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
     val copied = countFiles(copyRoot.toString, conf)

@@ -187,17 +187,18 @@ object JdbcControlPlane {
     override def futureTable(opco: String): String = metaRow(opco)._2
     override def fullExportInProgress(opco: String): Boolean = metaRow(opco)._3
 
-    /** COUNT probe against the ROUTED table (a name from the registry,
-      * not caller input — still identifier-validated before splicing). */
+    /** One-row probe against the ROUTED table (a name from the registry,
+      * not caller input — still identifier-validated before splicing):
+      * the table is empty when `SELECT 1` returns no row. `setMaxRows(1)`
+      * lets the database stop at the first row instead of counting a
+      * table that may hold millions. */
     override def isEmpty(opco: String, table: String): Boolean = withConn { conn =>
       require(ident.matches(table), s"invalid SQL identifier: '$table'")
       val st = conn.createStatement()
       try {
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
-        rs.next()
-        val n = rs.getLong(1)
-        rs.close()
-        n == 0L
+        st.setMaxRows(1)
+        val rs = st.executeQuery(s"SELECT 1 FROM $table")
+        try !rs.next() finally rs.close()
       } finally st.close()
     }
 

@@ -942,7 +942,7 @@ object ValidationQueries {
   // exports (one file per opco, derived from lineitem exactly like v5)
   // arrive one per micro-batch through
   // [[graft.streaming.PipelineStream.runPaStream]]: transform →
-  // invalid-price count → broadcast cluster routing → per-cluster
+  // invalid-price count → cluster routing by driver-side lookup → per-cluster
   // batch_id-scoped partitioned CSV (idempotent overwrite). The landed
   // two-cluster layout is read back through partition discovery and
   // aggregated per (cluster, opco); because routing is row-wise

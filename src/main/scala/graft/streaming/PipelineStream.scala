@@ -97,9 +97,10 @@ object PipelineStream {
     * as an ARRIVING-FILES stream — the v29 machinery applied to the
     * second reference route (VERDICT r8 item 5): pipe-CSV exports
     * arrive one file per micro-batch, each batch runs the SAME
-    * transform → price-check → broadcast cluster routing as the batch
-    * path ([[graft.transform.PaTransform]] — one implementation, two
-    * drivers, one write job per batch), and each cluster's rows land in
+    * transform → price-check → cluster routing (a lookup in the mapping,
+    * collected on the driver for each batch) as the batch path
+    * ([[graft.transform.PaTransform]] — one implementation, two drivers,
+    * one write job per batch), and each cluster's rows land in
     * a `cluster=<id>/batch_id=<id>`-scoped partitioned CSV directory.
     * The batch_id-scoped overwrite makes the at-least-once foreachBatch
     * effectively-once, exactly as the price-zone stream. Routing is

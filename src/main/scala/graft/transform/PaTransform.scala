@@ -2,6 +2,7 @@ package graft.transform
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The PA (Price Advisor) pipeline
   * (`/root/reference/src/pa/pa_etl_script.py:224-317`), rebuilt as a
@@ -14,7 +15,9 @@ import org.apache.spark.sql.functions._
   * job, partitioned by cluster and opco, into a hidden staging directory
   * beside the cluster targets; each `_cluster=<id>` subtree is then moved
   * to its cluster's directory (a rename on local and HDFS storage, a copy
-  * on object stores). The counts are observed on that same job.
+  * on object stores). The counts are observed on that same job, and the
+  * cluster of each row is looked up in the opco→cluster mapping
+  * collected on the driver, so that write is the file's only job.
   *
   * Semantic divergences from pandas (documented per SURVEY.md §7.4):
   * `pd.to_numeric` / `strptime` RAISE on junk; our engine flags and
@@ -68,29 +71,47 @@ object PaTransform {
   private val ClusterCol = "_cluster"
   private val Clusters = Seq("01", "02")
 
-  /** `df` with its opco's cluster as [[ClusterCol]]. `mapping(opco_id,
-    * cluster_id)` is dimension-sized → broadcast; the fact side never
-    * shuffles for routing. */
-  private def withCluster(df: DataFrame, mapping: DataFrame): DataFrame =
-    df.join(
-      broadcast(mapping.select(col("opco_id").as("_m_opco"), col("cluster_id").as(ClusterCol))),
-      col("opco_id") === col("_m_opco"), "left").drop("_m_opco")
+  /** `df` with its opco's cluster as [[ClusterCol]]: one row per
+    * mapping row of its opco, and one row with a null cluster when the
+    * opco is unmapped or null, as a left join with `mapping` on
+    * `opco_id` gives. `mapping(opco_id, cluster_id)` is dimension-sized:
+    * it is collected on the driver (a local frame collects with no job)
+    * and each row's clusters are looked up in a literal
+    * `map<string, array<string>>`, so routing adds no join, no broadcast
+    * and no job. A mapping row with a null `opco_id` matches nothing; one
+    * with a null `cluster_id` routes nowhere. Both columns must be plain
+    * strings, as the transform's `opco_id` and the cluster ids are;
+    * another type is refused with an `IllegalArgumentException` naming
+    * it, rather than compared after an implicit cast. */
+  private def withCluster(df: DataFrame, mapping: DataFrame): DataFrame = {
+    val Seq(opco, cluster) = Seq("opco_id", "cluster_id").map { c =>
+      val field = mapping.schema(c)
+      require(field.dataType == StringType,
+        s"the cluster mapping's $c must be a string, not ${field.dataType.sql}")
+      mapping.schema.fieldIndex(c)
+    }
+    val clustersOf = mapping.collect().toSeq
+      .filterNot(_.isNullAt(opco))
+      .groupMap(_.getString(opco))(_.getString(cluster))
+    val lookup = typedLit(clustersOf)
+    df.select(col("*"), explode_outer(lookup(col("opco_id"))).as(ClusterCol))
+  }
 
   /** Rows that route: mapped to one of `clusters` and active. */
   private def routes(clusters: Seq[String], activeOpcos: Seq[String]): Column =
     col(ClusterCol).isin(clusters: _*) && col("opco_id").isin(activeOpcos: _*)
 
-  /** J1 — route by opco→cluster mapping (broadcast dimension join) and
+  /** J1 — route by opco→cluster mapping (a driver-side lookup) and
     * active-membership; the invalid bucket is mapped-but-inactive or
     * unmapped (`pa_etl_script.py:85-101` + duplicate impl
     * `FetchFileListLambda/index.py:75-118`). */
   def route(df: DataFrame, mapping: DataFrame, activeOpcos: Seq[String],
       clusters: Seq[String] = Clusters): Routed = {
-    val joined = withCluster(df, mapping)
+    val clustered = withCluster(df, mapping)
     val byCluster = clusters.map { cid =>
-      cid -> joined.filter(routes(Seq(cid), activeOpcos)).drop(ClusterCol)
+      cid -> clustered.filter(routes(Seq(cid), activeOpcos)).drop(ClusterCol)
     }.toMap
-    val invalid = joined
+    val invalid = clustered
       .filter(!coalesce(routes(clusters, activeOpcos), lit(false)))
       .select(col("opco_id")).distinct()
     Routed(byCluster, invalid)

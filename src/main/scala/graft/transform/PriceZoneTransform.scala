@@ -14,9 +14,11 @@ import graft.validate.{Rules, ValidationReport, ValidationRule, Validator}
   *   removal → derive typed columns → partitioned write.
   *
   * The reference runs ≥14 Spark jobs for validation plus 3 count scans;
-  * this plan reads the file twice: the report's summary collect, then
-  * the write, which removes failed groups with a filter over the keys
-  * the summary already collected (`ScanCountSpec`).
+  * this plan reads the file twice, in two jobs and with no exchange: the
+  * report's map-only per-group summary, then the write, which removes
+  * failed groups with a filter over the keys the summary already
+  * collected. A file with no valid row stops after the first job
+  * (`ScanCountSpec`).
   */
 object PriceZoneTransform {
 

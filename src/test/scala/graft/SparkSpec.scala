@@ -3,7 +3,11 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{GraftListenerBridge, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite (lazy). */
@@ -54,5 +58,22 @@ trait SparkSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try { val a = body; GraftListenerBridge.drain(spark); (a, jobs.get) }
     finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the executed plan of every query that succeeded
+    * while it ran, in the order they finished: the twin of [[jobsDuring]]
+    * for plan shape, drained the same way. */
+  def executedPlansDuring[A](body: => A): (A, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    GraftListenerBridge.drain(spark)
+    spark.listenerManager.register(listener)
+    try { val a = body; GraftListenerBridge.drain(spark); (a, plans.asScala.toSeq) }
+    finally spark.listenerManager.unregister(listener)
   }
 }

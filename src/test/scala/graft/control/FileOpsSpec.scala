@@ -84,6 +84,18 @@ class FileOpsSpec extends SparkSpec {
     assert(ArchiveUtil.countFiles(dst.resolve(src.getFileName.toString).toString) === 1)
   }
 
+  test("archiving single files into one directory counts only the file just copied") {
+    withTempDir("arch_files") { root =>
+      val backup = mkdir(root, "backup")
+      for (name <- Seq("a.csv", "b.csv")) {
+        val file = Paths.get(root, name)
+        Files.writeString(file, name)
+        assert(ArchiveUtil.archive(file.toString, backup) === 1)
+        assert(Files.readString(Paths.get(backup, name)) === name)
+      }
+    }
+  }
+
   test("archive with no conf uses the session's Hadoop configuration") {
     val hadoop = spark.sparkContext.hadoopConfiguration
     val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(hadoop.get(k)))

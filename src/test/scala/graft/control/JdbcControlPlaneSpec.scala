@@ -113,6 +113,20 @@ class JdbcControlPlaneSpec extends AnyFunSuite {
       TableRouter.Skip("future non-empty, soft validation skips opco 068")))
   }
 
+  test("JDBC router store probes emptiness with one row") {
+    val store = new JdbcRouterStore(factory, "ROUTER_PROBE", softValidationLevel = 1)
+    val c = DerbyDb.conn()
+    val st = c.createStatement()
+    try {
+      st.execute("CREATE TABLE PROBE_EMPTY (supc INT)")
+      st.execute("CREATE TABLE PROBE_FULL (supc INT)")
+      st.execute("INSERT INTO PROBE_FULL VALUES (1), (2), (3)")
+    } finally { st.close(); c.close() }
+    assert(store.isEmpty("068", "PROBE_EMPTY"))
+    assert(!store.isEmpty("068", "PROBE_FULL"))
+    intercept[IllegalArgumentException](store.isEmpty("068", "PROBE_FULL; DROP TABLE X"))
+  }
+
   test("status store plugs into Notifier.run as the StatusStore") {
     val store = new JdbcStatusStore(factory, "STATUS_WIRED")
     store.createTable()

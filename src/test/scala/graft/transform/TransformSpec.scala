@@ -1,8 +1,9 @@
 package graft.transform
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.SparkSpec
 
 /** End-to-end pipeline specs — the layer the reference never tested
@@ -180,5 +181,91 @@ class TransformSpec extends SparkSpec {
     assert(routed.byCluster("02").select("supc").collect().map(_.getString(0)).sorted.toSeq === Seq("b", "e"))
     // 020 unmapped, 022 mapped to unknown cluster → both invalid
     assert(routed.invalidOrInactive.collect().map(_.getString(0)).sorted.toSeq === Seq("020", "022"))
+  }
+
+  // ---- routing by driver-side lookup against the join it replaced ------
+
+  /** An opco mapped twice to different clusters (018), one mapped twice
+    * to the same cluster (019), a null opco and a null cluster (022). */
+  private lazy val awkwardMapping = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(Seq(Row("018", "01"), Row("018", "02"), Row("019", "02"), Row("019", "02"),
+      Row(null, "01"), Row("022", null), Row("023", "01")).asJava,
+      StructType(Seq(StructField("opco_id", StringType, true), StructField("cluster_id", StringType, true))))
+  }
+
+  private val awkwardActive = Seq("018", "019", "022", "024")
+
+  /** The routing `PaTransform` used before its lookup: a left join with
+    * the broadcast mapping, then the same route filters. */
+  private def joinRouted(df: DataFrame, mapping: DataFrame, active: Seq[String])
+      : (Map[String, DataFrame], DataFrame) = {
+    val joined = df.join(
+      broadcast(mapping.select(col("opco_id").as("_m_opco"), col("cluster_id").as("_cluster"))),
+      col("opco_id") === col("_m_opco"), "left").drop("_m_opco")
+    def routes(cs: Seq[String]) = col("_cluster").isin(cs: _*) && col("opco_id").isin(active: _*)
+    (Seq("01", "02").map(c => c -> joined.filter(routes(Seq(c))).drop("_cluster")).toMap,
+      joined.filter(!coalesce(routes(Seq("01", "02")), lit(false))).select("opco_id").distinct())
+  }
+
+  /** Rows as strings, empty as null (a CSV round trip cannot tell them
+    * apart), sorted: a multiset. */
+  private def multiset(rows: Seq[Row]): Seq[Seq[String]] =
+    rows.map(_.toSeq.map(v => Option(v).map(_.toString).filter(_.nonEmpty).orNull))
+      .sortBy(_.map(String.valueOf).mkString("|"))
+
+  test("pa routing: route gives the broadcast join's rows for an awkward mapping") {
+    import scala.jdk.CollectionConverters._
+    val data = spark.createDataFrame(
+      Seq(Row("a", "018"), Row("b", "019"), Row("c", "020"), Row("d", "022"), Row("e", null),
+        Row("f", "023"), Row("g", "024"), Row("h", "018")).asJava,
+      StructType(Seq(StructField("supc", StringType, true), StructField("opco_id", StringType, true))))
+    val routed = PaTransform.route(data, awkwardMapping, awkwardActive)
+    val (byCluster, invalid) = joinRouted(data, awkwardMapping, awkwardActive)
+    for (c <- Seq("01", "02"))
+      assert(multiset(routed.byCluster(c).collect().toSeq) === multiset(byCluster(c).collect().toSeq), c)
+    assert(multiset(routed.byCluster("02").collect().toSeq).map(_.head) === Seq("a", "b", "b", "h"))
+    assert(multiset(routed.invalidOrInactive.collect().toSeq) === multiset(invalid.collect().toSeq))
+    assert(multiset(routed.invalidOrInactive.collect().toSeq).map(_.head) ===
+      Seq("020", "022", "023", "024", null))
+  }
+
+  test("pa end-to-end: runFile lands the broadcast join's rows for an awkward mapping") {
+    withTempDir("pa_awkward") { root =>
+      val in = mkdir(root, "in")
+      val outBase = mkdir(root, "out")
+      Files.writeString(java.nio.file.Paths.get(in, "pa.csv"), paCsv +
+        "9002913|5.00|1|r|2|N|2020-08-07 10:00:00|2020-08-05 12:30:45|019-4\n" +
+        "9002914|6.00|1|r|2|N|2020-08-07 10:00:00|2020-08-05 12:30:45|022-1\n")
+      val (total, badPrice) = PaTransform.runFile(
+        spark, s"$in/pa.csv", cid => s"$outBase/cluster_$cid", awkwardMapping, awkwardActive)
+      assert(total === 7 && badPrice === 2)
+      val transformed = PaTransform.transform(graft.sources.CsvSources.pipe(spark, s"$in/pa.csv"))
+      val (byCluster, _) = joinRouted(transformed, awkwardMapping, awkwardActive)
+      for (c <- Seq("01", "02")) {
+        // each landed row, with its opco taken back from the partition directory
+        val landed = new java.io.File(s"$outBase/cluster_$c").listFiles().toSeq
+          .filter(d => d.isDirectory && d.getName.startsWith("opco_id="))
+          .flatMap { d =>
+            val opco = d.getName.stripPrefix("opco_id=")
+            spark.read.option("header", "true").csv(d.getPath).collect().toSeq
+              .map(r => Row.fromSeq(r.toSeq :+ opco))
+          }
+        assert(multiset(landed) === multiset(byCluster(c).collect().toSeq), c)
+      }
+      // 018 lands in both clusters; 019's two mapping rows land its rows twice
+      assert(multiset(spark.read.option("header", "true").csv(s"$outBase/cluster_02").collect().toSeq)
+        .map(_.head).sorted === Seq("9002908", "9002909", "9002909", "9002911", "9002913", "9002913"))
+    }
+  }
+
+  test("pa routing: a mapping whose opco_id is not a string is refused, naming the type") {
+    import scala.jdk.CollectionConverters._
+    val mapping = spark.createDataFrame(Seq(Row(18, "01")).asJava,
+      StructType(Seq(StructField("opco_id", IntegerType, true), StructField("cluster_id", StringType, true))))
+    val data = spark.createDataFrame(Seq(Row("a", "018")).asJava,
+      StructType(Seq(StructField("supc", StringType, true), StructField("opco_id", StringType, true))))
+    val e = intercept[IllegalArgumentException](PaTransform.route(data, mapping, Seq("018")))
+    assert(e.getMessage.contains("opco_id must be a string, not INT"))
   }
 }

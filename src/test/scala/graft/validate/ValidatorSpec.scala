@@ -1,7 +1,9 @@
 package graft.validate
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.Row
 import graft.SparkSpec
 
@@ -167,5 +169,101 @@ class ValidatorSpec extends SparkSpec {
     assert(report.failedGroupKeys === Seq("019", "021"))
     // group-level attribution: the valid row of opco 019 is removed too
     assert(report.invalid === 3L && report.valid === 0L)
+  }
+
+  // ---- run's one-job summary against the groupBy it replaced ----------
+
+  /** The report as `run` built it from [[Validator.groupSummary]]'s rows
+    * before its summary became a map-only fold: the parity reference. */
+  private def summaryReport(d: DataFrame, rules: Seq[ValidationRule]): ValidationReport = {
+    val rows = Validator.groupSummary(Validator.flagged(d, rules), rules, "k").collect().toSeq
+    val received = rows.map(_.getLong(1)).sum
+    val failed = rows.filter(r => rules.indices.exists(i => r.getLong(i + 2) > 0L))
+    val keys = failed.map(r => Option(r.get(0)).map {
+      case b: Array[Byte] => new String(b, UTF_8)
+      case k => k.toString
+    }).sortBy(k => (k.isDefined, k.getOrElse("")))
+    ValidationReport(received, received - failed.map(_.getLong(1)).sum, keys,
+      rules.zipWithIndex.map { case (r, i) => r.name -> rows.map(_.getLong(i + 2)).sum }.toMap)
+  }
+
+  /** Rows as comparable values: binary by content, order-free. */
+  private def contents(d: DataFrame): Seq[Seq[Any]] =
+    d.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).sortBy(_.mkString("|"))
+
+  /** Key `k` of `keyType`, value `v`; violations are a negative or a
+    * null value. */
+  private def keyed(keyType: DataType, partitions: Int, rows: Seq[(Any, Integer)]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (k, v) => Row(k, v) }, partitions),
+      StructType(Seq(StructField("k", keyType), StructField("v", IntegerType))))
+
+  private val parityRules = Seq(
+    ValidationRule("negative", col("v") < 0),
+    ValidationRule("missing", col("v").isNull))
+
+  /** `run` gives `summaryReport`'s report and `validRows`' rows; returns
+    * the report for case-specific checks. */
+  private def assertParity(d: DataFrame): ValidationReport = {
+    val (valid, report) = Validator.run(d, parityRules, "k")
+    assert(report === summaryReport(d, parityRules))
+    assert(contents(valid) === contents(Validator.validRows(d, parityRules, "k")))
+    report
+  }
+
+  test("run's report equals groupSummary's: string keys with a null group") {
+    val report = assertParity(keyed(StringType, 3, Seq(
+      "a" -> 1, (null, 2), "b" -> -1, "a" -> 3, (null, null), "c" -> 4, "b" -> 5, "" -> 6)))
+    assert(report.failedGroupKeys === Seq(null, "b"))
+    assert(report.received === 8 && report.valid === 4)
+    assert(report.violationsByRule === Map("negative" -> 1L, "missing" -> 1L))
+  }
+
+  test("run's report equals groupSummary's: integer and double keys") {
+    val ints = assertParity(keyed(IntegerType, 2, Seq(
+      1 -> 1, 2 -> -2, (null, 3), 10 -> 4, 2 -> 5, 1 -> -6)))
+    assert(ints.failedGroupKeys === Seq("1", "2"))
+    // grouping normalizes floats: -0.0 joins 0.0, every NaN is one group
+    val doubles = assertParity(keyed(DoubleType, 3, Seq(
+      0.0 -> 1, -0.0 -> -1, Double.NaN -> 2, Double.NaN -> null, 1.5 -> 3)))
+    assert(doubles.failedGroupKeys === Seq("0.0", "NaN"))
+    assert(doubles.valid === 1)
+  }
+
+  test("run's report equals groupSummary's: binary keys group by content") {
+    def bytes(s: String): Array[Byte] = s.getBytes(UTF_8)
+    // equal contents in distinct arrays are one group
+    val report = assertParity(keyed(BinaryType, 2, Seq(
+      bytes("ab") -> 1, bytes("ab") -> -1, bytes("cd") -> 2, (null, 3), bytes("") -> null, bytes("cd") -> 4)))
+    assert(report.failedGroupKeys === Seq("", "ab"))
+    assert(report.valid === 3)
+  }
+
+  test("run's report equals groupSummary's: an empty frame") {
+    val report = assertParity(keyed(StringType, 2, Seq.empty))
+    assert(report === ValidationReport(0L, 0L, Nil, Map("negative" -> 0L, "missing" -> 0L)))
+  }
+
+  test("run's report equals groupSummary's: every group failing") {
+    val report = assertParity(keyed(StringType, 2, Seq("a" -> -1, "b" -> null, (null, -3), "a" -> 4)))
+    assert(report.failedGroupKeys === Seq(null, "a", "b"))
+    assert(report.valid === 0)
+  }
+
+  test("run's report equals groupSummary's: one group spans all 8 partitions") {
+    // "x" lands in every partition, each other key in one; one row of
+    // "x", in the last partition, fails it everywhere
+    val rows = (0 until 800).map { i =>
+      (if (i % 100 == 0) s"p${i / 100}" else "x") -> Integer.valueOf(if (i == 300 || i == 799) -1 else i)
+    }
+    val d = keyed(StringType, 8, rows)
+    assert(d.rdd.glom().collect().map(_.count(_.getString(0) == "x")).forall(_ > 0))
+    val report = assertParity(d)
+    assert(report.received === 800 && report.valid === 7)
+    assert(report.failedGroupKeys === Seq("p3", "x"))
+    assert(report.violationsByRule("negative") === 2L)
   }
 }
