@@ -3,34 +3,22 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import graft.plans.{AsOfBackward, AsOfDirection, AsOfForward, AsOfJoin, AsOfJoinStrategy}
+import graft.plans.{AsOfBackward, AsOfDirection, AsOfForward, AsOfJoin}
 
 /** Public entry for the native backward as-of join (see
   * [[graft.plans.AsOfJoin]] for the operator design). Resolves columns
   * by name against the analyzed children, re-aliases the right side
   * with fresh expression ids (the two sides usually scan the same
   * table, and a bypassed analyzer never runs Join's dedupRight), and
-  * self-registers the planner strategy on the session so the operator
-  * works on ANY SparkSession — no `spark.sql.extensions` config
-  * required.
+  * runs [[graft.Graft.install]] so the operator plans on ANY
+  * SparkSession. The same install puts the SQL auto-rewrite on the
+  * session: the standard as-of idiom (equi + time-bound join topped by
+  * `row_number() = 1` per left row, or its max_by/min_by aggregate
+  * spelling) plans as the native node with no API change (see
+  * [[graft.plans.AsOfJoinAutoRewrite]]; disable per-session with
+  * `spark.graft.asOfJoin.autoRewrite=false`).
   */
 object AsOf {
-
-  /** Installs the SQL auto-rewrite on the session: after this, the
-    * standard `spark.sql` as-of idiom — inner/left join on
-    * `l.k = r.k AND r.t <= l.t` topped by `row_number() = 1` per left
-    * row — plans as the native [[graft.plans.AsOfJoin]] with no API
-    * change (see [[graft.plans.AsOfJoinAutoRewrite]] for the exact
-    * match conditions, including the partition-uniqueness proof).
-    * Also installed by `GraftExtensions`; disable per-session with
-    * `spark.graft.asOfJoin.autoRewrite=false`. */
-  def enableSqlRewrite(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.plans.SessionRegistration.ensure(spark, AsOfJoinStrategy,
-      Seq(graft.plans.AsOfJoinAutoRewrite,
-        graft.plans.AsOfAggregateRewrite,
-        graft.plans.AsOfJoinFilterPushdown,
-        graft.plans.AsOfJoinColumnPruning,
-        graft.plans.NativeJoinRuntimeFilter))
 
   /** Backward as-of join: every `left` row gains the `right` row with
     * the greatest `rightTime` ≤ `leftTime` for equal `keys`, or nulls.
@@ -54,10 +42,7 @@ object AsOf {
       leftTime: String, rightTime: String, direction: AsOfDirection,
       toleranceMicros: Option[Long]): DataFrame = {
     val spark = left.sparkSession
-    graft.plans.SessionRegistration.ensure(spark, AsOfJoinStrategy,
-      Seq(graft.plans.AsOfJoinFilterPushdown,
-        graft.plans.AsOfJoinColumnPruning,
-        graft.plans.NativeJoinRuntimeFilter))
+    graft.Graft.install(spark)
     val lPlan = left.queryExecution.analyzed
     val rAnalyzed = right.queryExecution.analyzed
     // fresh ids so self-as-of (same scan on both sides) stays unambiguous

@@ -603,7 +603,6 @@ object CrossQueries {
   // attributed-view stats, so the gate exercises the restored right
   // key through a downstream aggregate.
   def x63(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.Interval.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_id"),
@@ -658,7 +657,6 @@ object CrossQueries {
   // purchase windows open and close, O(n + m + matches) with state =
   // max concurrent window overlap per user.
   def x66(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.Interval.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_id"),
@@ -708,7 +706,6 @@ object CrossQueries {
   // whole join back to SMJ + residual (per-user click×view pairs
   // through the join buffer). Per-view click counts aggregate after.
   def x67(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.Interval.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_id"),
@@ -762,7 +759,6 @@ object CrossQueries {
   // PlanRegressionSpec-pinned): the quadratic SMJ+window idiom plan is
   // replaced by the two-exchange O(1)-state merge.
   def x68(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.AsOf.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         graft.streaming.Streaming.tsMicros(col("ts")).as("tsu"))
@@ -819,7 +815,6 @@ object CrossQueries {
   // Oracle: DuckDB's native ASOF LEFT JOIN, same as x68 — two engines,
   // two idioms, one result.
   def x70(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.AsOf.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         graft.streaming.Streaming.tsMicros(col("ts")).as("tsu"))
@@ -857,7 +852,6 @@ object CrossQueries {
   // literally — the rewritten O(1)-state plan must agree with the
   // brute-force form row for row.
   def x72(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.AsOf.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         graft.streaming.Streaming.tsMicros(col("ts")).as("tsu"))
@@ -916,7 +910,6 @@ object CrossQueries {
   // exactly. Oracle: DuckDB's native strict ASOF (`ON l.ets > r.rts`)
   // — both engines' native as-of, strict form, must agree.
   def x71(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.AsOf.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         timestamp_micros(graft.streaming.Streaming.tsMicros(col("ts"))).as("ets"))
@@ -978,7 +971,6 @@ object CrossQueries {
   // pushed the whole join back to SMJ + residual. Oracle: DuckDB
   // computes the identical strict window over make_timestamp(micros).
   def x69(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.Interval.enableSqlRewrite(spark)
     val ev = Tables.events(spark, dir)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_id"),
@@ -2937,7 +2929,6 @@ object CrossQueries {
   // executes the self-join literally — elimination must be
   // result-invisible.
   def x76(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.SelfJoin.enable(spark)
     Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n"),
@@ -2981,7 +2972,6 @@ object CrossQueries {
   // oracle executes the same SQL literally — the rewrite must be
   // result-invisible.
   def x77(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.EagerAgg.enable(spark)
     Tables.lineitem(spark, dir).createOrReplaceTempView("graft_x77_l")
     Tables.orders(spark, dir).createOrReplaceTempView("graft_x77_o")
     spark.sql(
@@ -3113,7 +3103,6 @@ object CrossQueries {
   // oracle executes the DISTINCT literally over DuckDB's native ASOF —
   // elimination must be result-invisible.
   def x79(spark: SparkSession, dir: String): DataFrame = {
-    graft.operators.DistinctElim.enable(spark)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         graft.streaming.Streaming.tsMicros(col("ts")).as("tsu"))

@@ -3,32 +3,21 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import graft.plans.{IntervalJoin, IntervalJoinStrategy}
+import graft.plans.IntervalJoin
 
 /** Public entry for the native keyed point-in-interval join (see
   * [[graft.plans.IntervalJoin]] for the operator design). Resolves
   * columns by name against the analyzed children, re-aliases the right
   * side with fresh expression ids (both sides often derive from the
   * same scan, and a bypassed analyzer never runs Join's dedupRight),
-  * and self-registers the planner strategy so the operator works on
-  * ANY SparkSession — no `spark.sql.extensions` config required.
+  * and runs [[graft.Graft.install]] so the operator plans on ANY
+  * SparkSession. The same install puts the SQL auto-rewrite on the
+  * session: a plain inner join of the shape
+  * `l.k = r.k AND t BETWEEN lo AND hi` plans as the native sweep with
+  * no API change (see [[graft.plans.IntervalJoinAutoRewrite]]; disable
+  * per-session with `spark.graft.intervalJoin.autoRewrite=false`).
   */
 object Interval {
-
-  /** Installs the SQL auto-rewrite on the session: after this, ANY
-    * plain `spark.sql` / DataFrame inner join of the shape
-    * `l.k = r.k AND t BETWEEN lo AND hi` plans as the native
-    * [[graft.plans.IntervalJoin]] sweep with no API change (see
-    * [[graft.plans.IntervalJoinAutoRewrite]] for the exact match
-    * conditions and the schema-restoration contract). Also installed
-    * by `GraftExtensions`; disable per-session with
-    * `spark.graft.intervalJoin.autoRewrite=false`. */
-  def enableSqlRewrite(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.plans.SessionRegistration.ensure(spark, IntervalJoinStrategy,
-      Seq(graft.plans.IntervalJoinAutoRewrite,
-        graft.plans.IntervalJoinFilterPushdown,
-        graft.plans.IntervalJoinColumnPruning,
-        graft.plans.NativeJoinRuntimeFilter))
 
   /** Inner point-in-interval join: every `left` row (keys, `leftTime`)
     * is joined with each `right` row (keys, `rightLo`, `rightHi`)
@@ -41,10 +30,7 @@ object Interval {
   def join(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightLo: String, rightHi: String): DataFrame = {
     val spark = left.sparkSession
-    graft.plans.SessionRegistration.ensure(spark, IntervalJoinStrategy,
-      Seq(graft.plans.IntervalJoinFilterPushdown,
-        graft.plans.IntervalJoinColumnPruning,
-        graft.plans.NativeJoinRuntimeFilter))
+    graft.Graft.install(spark)
     val lPlan = left.queryExecution.analyzed
     val rAnalyzed = right.queryExecution.analyzed
     // fresh ids so self-joins (same scan on both sides) stay unambiguous

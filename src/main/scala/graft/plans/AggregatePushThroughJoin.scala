@@ -44,8 +44,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * in the Aggregate's column order, so parents resolve unchanged.
   *
   * Conf-gated by `spark.graft.eagerAggregation` (default true where
-  * installed — GraftExtensions or [[graft.operators.SelfJoin]]-style
-  * [[graft.operators.EagerAgg.enable]]).
+  * installed by [[graft.Graft.install]]).
   */
 object AggregatePushThroughJoin extends Rule[LogicalPlan] {
 

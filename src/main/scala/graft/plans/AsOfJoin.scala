@@ -85,8 +85,7 @@ case class AsOfJoin(
   * everything else as the sort-merge [[AsOfJoinExec]]. Threshold:
   * `spark.graft.asOfJoin.broadcastThreshold` when set, else
   * `spark.sql.autoBroadcastJoinThreshold`; ≤ 0 disables broadcast.
-  * Injected via `spark.experimental.extraStrategies` (self-registered
-  * by [[graft.operators.AsOf]]) and `GraftExtensions`. */
+  * Installed by [[graft.Graft.install]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt, dir, tol) =>

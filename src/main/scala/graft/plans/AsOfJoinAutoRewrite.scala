@@ -96,8 +96,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
   * join's output. The window's `rn` column is restored as literal 1.
   *
   * Conf-gated by `spark.graft.asOfJoin.autoRewrite` (default true
-  * where installed — via GraftExtensions or
-  * [[graft.operators.AsOf.enableSqlRewrite]]).
+  * where installed by [[graft.Graft.install]]).
   */
 object AsOfJoinAutoRewrite extends Rule[LogicalPlan] {
 

@@ -49,8 +49,7 @@ import org.apache.spark.sql.internal.SQLConf
   * is the single most expensive no-op a query can run.
   *
   * Conf-gated by `spark.graft.distinct.eliminate` (default true where
-  * installed — via `GraftExtensions` or
-  * [[graft.operators.DistinctElim.enable]]).
+  * installed by [[graft.Graft.install]]).
   */
 object DistinctElimination extends Rule[LogicalPlan] {
 

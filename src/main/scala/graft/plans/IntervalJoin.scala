@@ -62,8 +62,7 @@ case class IntervalJoin(
   * bound). Threshold: `spark.graft.intervalJoin.broadcastThreshold`
   * when set, else `spark.sql.autoBroadcastJoinThreshold`; ≤ 0 disables
   * the broadcast path (the same contract as Spark's threshold).
-  * Injected via `spark.experimental.extraStrategies` (self-registered
-  * by [[graft.operators.Interval]]) and `GraftExtensions`. */
+  * Installed by [[graft.Graft.install]]. */
 object IntervalJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case IntervalJoin(l, r, lk, rk, lt, lo, hi) =>

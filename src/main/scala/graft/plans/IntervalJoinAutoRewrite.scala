@@ -63,8 +63,7 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * SQL predicate evaluates to UNKNOWN for.
   *
   * Conf-gated by `spark.graft.intervalJoin.autoRewrite` (default true
-  * where the rule is installed — via GraftExtensions or
-  * [[graft.operators.Interval.enableSqlRewrite]]).
+  * where the rule is installed by [[graft.Graft.install]]).
   */
 object IntervalJoinAutoRewrite extends Rule[LogicalPlan] {
 

@@ -28,8 +28,7 @@ import org.apache.spark.sql.types.IntegerType
   * rewritten predicates are detected structurally (an equivalent guard
   * conjunct already present) and skipped.
   *
-  * Registered by [[graft.GraftExtensions]] via
-  * `injectOptimizerRule(LevenshteinGuardRule)`.
+  * Installed by [[graft.Graft.install]].
   */
 object LevenshteinGuardRule extends Rule[LogicalPlan] {
 

@@ -52,8 +52,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * core attribute; and that key set is provably unique on the core.
   *
   * Conf-gated by `spark.graft.selfJoin.eliminate` (default true where
-  * the rule is installed — via `GraftExtensions` or
-  * [[graft.operators.SelfJoin.enable]]).
+  * the rule is installed by [[graft.Graft.install]]).
   */
 object SelfJoinElimination extends Rule[LogicalPlan] {
 

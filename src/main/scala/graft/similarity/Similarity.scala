@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
@@ -26,11 +26,6 @@ import graft.functions.expressions.FloatDotProduct
   * part of the join key.
   */
 object Similarity {
-
-  /** SQL registration of the codegen dot product: `float_dot(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDotProduct(exprs.head, exprs(1)), "built-in")
 
   /** Production dot / cosine via the codegen expression. */
   def dotF(a: Column, b: Column): Column = {

@@ -1,7 +1,6 @@
 package graft.joins
 
-import graft.SparkSpec
-import graft.operators.EagerAgg
+import graft.{Graft, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
@@ -41,7 +40,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
   }
 
   private def parity(make: => DataFrame, expectPush: Boolean): Unit = {
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     val on = make
     assert(pushed(on) == expectPush,
       s"expected pushed=$expectPush:\n${on.queryExecution.optimizedPlan}")
@@ -83,7 +82,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
 
   test("non-unique far side falls back") {
     views()
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT l.k, SUM(l.v) AS sv
         |FROM graft_eag_fact l JOIN graft_eag_fact r ON l.k = r.k
@@ -93,7 +92,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
 
   test("aggregate reading the far side falls back") {
     views()
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT l.k, MAX(d.x) AS mx
         |FROM graft_eag_fact l JOIN graft_eag_dim d ON l.k = d.k
@@ -104,7 +103,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
   test("grouping by a strict superset of the join keys falls back " +
       "(cost guard: the pushed exchange would not serve the join)") {
     views()
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT l.k, l.v, COUNT(*) AS n
         |FROM graft_eag_fact l JOIN graft_eag_dim d ON l.k = d.k
@@ -114,7 +113,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
 
   test("non-equi residual conjuncts fall back") {
     views()
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT l.k, SUM(l.v) AS sv
         |FROM graft_eag_fact l JOIN graft_eag_dim d
@@ -132,7 +131,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
 
   test("global aggregate falls back") {
     views()
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT SUM(l.v) AS sv
         |FROM graft_eag_fact l JOIN graft_eag_dim d ON l.k = d.k"""
@@ -142,7 +141,7 @@ class AggregatePushThroughJoinSpec extends SparkSpec {
 
   test("kill-switch leaves the plan untouched") {
     views()
-    EagerAgg.enable(spark)
+    Graft.install(spark)
     spark.conf.set("spark.graft.eagerAggregation", "false")
     try {
       val df = spark.sql(

@@ -1,7 +1,6 @@
 package graft.joins
 
-import graft.SparkSpec
-import graft.operators.AsOf
+import graft.{Graft, SparkSpec}
 import graft.plans.{AsOfJoinExec, BroadcastAsOfJoinExec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -46,7 +45,7 @@ class AsOfAggregateRewriteSpec extends SparkSpec {
   }
 
   private def parity(make: => DataFrame): Unit = {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val rewritten = make
     assert(hasAsOfExec(rewritten), rewritten.queryExecution.sparkPlan.toString)
     val a = rewritten.collect().map(_.toSeq).sortBy(_.mkString("|"))
@@ -61,7 +60,7 @@ class AsOfAggregateRewriteSpec extends SparkSpec {
   }
 
   private def noRewrite(make: => DataFrame): Unit = {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     assert(!hasAsOfExec(make))
   }
 
@@ -151,11 +150,10 @@ class AsOfAggregateRewriteSpec extends SparkSpec {
     // same result through a different native operator. Either native
     // node is acceptable; what must never survive is the quadratic
     // SMJ+aggregate, so assert native-or-native and value parity.
-    // Register the interval family explicitly so the interaction is
-    // exercised deterministically, not only when suite order happens
-    // to have run an interval gate first in the shared session.
-    graft.operators.Interval.enableSqlRewrite(spark)
-    AsOf.enableSqlRewrite(spark)
+    // Install every rule explicitly so the interaction is exercised
+    // deterministically, not only when suite order happens to have run
+    // a gate first in the shared session.
+    Graft.install(spark)
     def fwd = spark.sql(
       """SELECT l.lid, min_by(r.rt, r.rt) AS mrt
         |FROM graft_asofagg_l l JOIN graft_asofagg_r r

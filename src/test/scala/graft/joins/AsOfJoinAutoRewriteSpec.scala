@@ -1,7 +1,6 @@
 package graft.joins
 
-import graft.SparkSpec
-import graft.operators.AsOf
+import graft.{Graft, SparkSpec}
 import graft.plans.{AsOfJoinExec, BroadcastAsOfJoinExec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -56,7 +55,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
     * and compares row-for-row. `tieCols` projects away columns that
     * are legitimately tie-dependent before comparing. */
   private def parity(make: => DataFrame): Unit = {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val rewritten = make
     assert(hasAsOfExec(rewritten), rewritten.queryExecution.sparkPlan.toString)
     val a = rewritten.collect().map(_.toSeq).sortBy(_.mkString("|"))
@@ -132,7 +131,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
     // reinterpret as epoch-micros longs (MicrosView), apply the -1,
     // and compare both sides on the LONG view — pre-r8 this shape
     // fell back to the quadratic plan
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     Seq((1L, 10L, 100L), (2L, 10L, 150L), (3L, 20L, 150L), (4L, 10L, 151L))
       .toDF("lid", "k", "tu")
@@ -171,7 +170,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("strict MinValue left time cannot wrap (underflow guard)") {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     Seq((1L, 10L, Long.MinValue), (2L, 10L, 100L))
       .toDF("lid", "k", "t")
@@ -205,7 +204,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("restored right key and rn column carry correct values downstream") {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     leftView(); rightView()
     // r.k is ELIDED by the native node and restored by the rewrite's
     // Project under the original exprId (NULL on the null-extended
@@ -229,7 +228,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("uniqueness proof traces through Project and Filter") {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     Seq((1L, 10L, 100L), (2L, 10L, 200L), (3L, 20L, 150L))
       .toDF("lid", "k", "t")
@@ -248,7 +247,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("monotonically_increasing_id partition is accepted as unique") {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     Seq((10L, 100L), (10L, 200L), (20L, 150L), (10L, 200L)) // dup rows OK
       .toDF("k", "t")
@@ -302,7 +301,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("non-matching shapes are left untouched") {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     leftView(); rightView()
     def plan(sql: String): DataFrame = spark.sql(sql)
     // RIGHT OUTER: not row-preserving on the partition side
@@ -376,7 +375,7 @@ class AsOfJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("unprovable partition uniqueness: no rewrite by default, opt-in conf fires") {
-    AsOf.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     // plain rows — lid is unique IN THE DATA but nothing structural
     // proves it, so the default must fall back

@@ -1,7 +1,7 @@
 package graft.joins
 
-import graft.SparkSpec
-import graft.operators.{AsOf, DistinctElim}
+import graft.{Graft, SparkSpec}
+import graft.operators.AsOf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
@@ -37,7 +37,7 @@ class DistinctEliminationSpec extends SparkSpec {
 
   private def parity(make: => DataFrame, eliminated: Boolean,
       aggsWhenOff: Int): Unit = {
-    DistinctElim.enable(spark)
+    Graft.install(spark)
     val on = make
     val onAggs = aggs(on)
     val a = on.collect().map(_.toSeq).sortBy(_.mkString("|"))
@@ -82,7 +82,7 @@ class DistinctEliminationSpec extends SparkSpec {
 
   test("non-unique key keeps the distinct (and it genuinely dedups)") {
     val ss = spark; import ss.implicits._
-    DistinctElim.enable(spark)
+    Graft.install(spark)
     val df = Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("k", "s")
       .crossJoin(spark.range(1).select(lit(1).as("one")))
       .select($"k", $"s")
@@ -94,19 +94,19 @@ class DistinctEliminationSpec extends SparkSpec {
   test("output WITHOUT the unique key keeps the distinct") {
     // the as-of left key u is unique, but the distinct only sees the
     // non-unique payload columns — nothing provable, must dedup
-    DistinctElim.enable(spark)
+    Graft.install(spark)
     val df = asofFrame().select(col("lastv")).distinct()
     assert(aggs(df) == 3, df.queryExecution.optimizedPlan.toString)
   }
 
   test("a real aggregate (not grouping-only) is untouched") {
-    DistinctElim.enable(spark)
+    Graft.install(spark)
     val df = asofFrame().groupBy(col("u")).agg(sum(col("lastv")).as("s"))
     assert(aggs(df) == 3, df.queryExecution.optimizedPlan.toString)
   }
 
   test("kill-switch keeps the distinct") {
-    DistinctElim.enable(spark)
+    Graft.install(spark)
     spark.conf.set("spark.graft.distinct.eliminate", "false")
     try {
       val df = asofFrame().distinct()
@@ -122,7 +122,7 @@ class DistinctEliminationSpec extends SparkSpec {
     // in every shape this rule eliminates (Spark's own
     // RemoveRedundantAggregates / distinctKeys propagation never fires
     // on them — probed independently with a bare spark-shell, NOTES_r9).
-    DistinctElim.enable(spark)
+    Graft.install(spark)
     spark.conf.set("spark.graft.distinct.eliminate", "false")
     try {
       assert(aggs(asofFrame().distinct()) == 3)

@@ -1,7 +1,6 @@
 package graft.joins
 
-import graft.SparkSpec
-import graft.operators.Interval
+import graft.{Graft, SparkSpec}
 import graft.plans.IntervalJoinExec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -41,7 +40,7 @@ class IntervalJoinAutoRewriteSpec extends SparkSpec {
   }
 
   private def parity(make: => DataFrame): Unit = {
-    Interval.enableSqlRewrite(spark)
+    Graft.install(spark)
     val rewritten = make
     assert(hasIntervalExec(rewritten), rewritten.queryExecution.sparkPlan.toString)
     val a = rewritten.collect().map(_.toSeq).sortBy(_.mkString("|"))
@@ -129,7 +128,7 @@ class IntervalJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("bound expression spanning both sides leaves the join untouched") {
-    Interval.enableSqlRewrite(spark)
+    Graft.install(spark)
     pointsDf.createOrReplaceTempView("graft_arw_p")
     spansDf.createOrReplaceTempView("graft_arw_s")
     assert(!hasIntervalExec(spark.sql(
@@ -171,7 +170,7 @@ class IntervalJoinAutoRewriteSpec extends SparkSpec {
     // succession on the internal representation (the type's full
     // precision), applied via the zero-cost MicrosView reinterpret.
     // Micros-adjacent timestamps pin the boundary exactly.
-    Interval.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     def ts(micros: Long): java.sql.Timestamp = {
       val t = new java.sql.Timestamp(micros / 1000)
@@ -205,7 +204,7 @@ class IntervalJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("strict MaxValue/MinValue bounds cannot wrap (overflow guard)") {
-    Interval.enableSqlRewrite(spark)
+    Graft.install(spark)
     val ss = spark; import ss.implicits._
     Seq((1L, 5L, 1L), (1L, Long.MaxValue, 2L))
       .toDF("k", "t", "lid").createOrReplaceTempView("graft_arw_pmax")
@@ -222,7 +221,7 @@ class IntervalJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("non-matching shapes are left untouched") {
-    Interval.enableSqlRewrite(spark)
+    Graft.install(spark)
     pointsDf.createOrReplaceTempView("graft_arw_p")
     spansDf.createOrReplaceTempView("graft_arw_s")
     // inclusive timestamp form rewrites (and so does strict — see the
@@ -260,7 +259,7 @@ class IntervalJoinAutoRewriteSpec extends SparkSpec {
   }
 
   test("restored right key column carries correct values downstream") {
-    Interval.enableSqlRewrite(spark)
+    Graft.install(spark)
     pointsDf.createOrReplaceTempView("graft_arw_p")
     spansDf.createOrReplaceTempView("graft_arw_s")
     val df = spark.sql(

@@ -1,7 +1,6 @@
 package graft.joins
 
-import graft.SparkSpec
-import graft.operators.SelfJoin
+import graft.{Graft, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
@@ -32,7 +31,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
   }
 
   private def parity(make: => DataFrame, eliminated: Boolean): Unit = {
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     val on = make
     assert((joins(on) == 0) == eliminated,
       s"expected eliminated=$eliminated:\n${on.queryExecution.optimizedPlan}")
@@ -95,7 +94,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
     val ss = spark; import ss.implicits._
     Seq((1L, 10L), (1L, 20L), (2L, 5L)).toDF("k", "v")
       .createOrReplaceTempView("graft_sje_dup")
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT a.k, a.v, b.v AS v2
         |FROM graft_sje_dup a JOIN graft_sje_dup b ON a.k = b.k""".stripMargin)
@@ -115,7 +114,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
     spark.range(3).toDF("k")
       .withColumn("r", rand(7))
       .createOrReplaceTempView("graft_sje_rand")
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT a.k, a.r, b.r AS r2 FROM
         |  (SELECT k, max(r) AS r FROM graft_sje_rand GROUP BY k) a
@@ -127,7 +126,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
 
   test("genuinely different sides fall back") {
     metricView()
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT a.k, a.n, b.n AS n2
         |FROM graft_sje_m a
@@ -138,7 +137,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
 
   test("kill-switch leaves the join untouched") {
     metricView()
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     spark.conf.set("spark.graft.selfJoin.eliminate", "false")
     try {
       val df = spark.sql(
@@ -159,7 +158,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
     // The node-level orderDependent() guard must refuse both shapes
     // (ADVICE r8).
     metricView()
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     val limited = spark.sql(
       """SELECT a.k, a.n, b.n AS n2 FROM
         |  (SELECT k, n FROM graft_sje_m LIMIT 3) a
@@ -180,7 +179,7 @@ class SelfJoinEliminationSpec extends SparkSpec {
 
   test("outer self-joins are not touched") {
     metricView()
-    SelfJoin.enable(spark)
+    Graft.install(spark)
     val df = spark.sql(
       """SELECT a.k, a.n, b.n AS n2
         |FROM graft_sje_m a LEFT JOIN graft_sje_m b ON a.k = b.k"""

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{Graft, SparkSpec}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +37,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("float_dot registers as a SQL function") {
-    Similarity.register(spark)
+    Graft.install(spark)
     vecs.createOrReplaceTempView("vecs_tmp")
     val d = spark.sql(
       "SELECT float_dot(a.embedding, b.embedding) FROM vecs_tmp a JOIN vecs_tmp b ON a.vec_id = 0 AND b.vec_id = 2")

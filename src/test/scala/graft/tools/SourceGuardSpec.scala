@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * is a number the bench would give), every materialization pin goes
   * through [[graft.Pins]] (so `spark.graft.pin.mode` reaches it), and
   * every round-carrying loop runs on [[graft.Fixpoint]] (so each round
-  * is pinned and the round it replaces freed in one place). Comment
+  * is pinned and the round it replaces freed in one place), and every
+  * Catalyst registration goes through [[graft.Graft.install]] (so every
+  * session sees the same rules, strategies and functions). Comment
   * lines are skipped: scaladoc may show the raw calls. */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -74,6 +76,14 @@ class SourceGuardSpec extends AnyFunSuite {
   test("localCheckpoint( and .checkpoint( only in Pins") {
     val hits = offenders(l => l.contains("localCheckpoint(") || l.contains(".checkpoint("),
       "graft/Pins.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  private val registration =
+    """extra(?:Optimizations|Strategies)\s*[+:]*=(?!=)|functionRegistry|registerFunction\(|createOrReplaceTempFunction\(|SparkSessionExtensions""".r
+
+  test("rule, strategy and function registration only in Graft") {
+    val hits = offenders(l => registration.findFirstIn(l).isDefined, "graft/Graft.scala")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
