@@ -21,7 +21,7 @@ import scala.util.control.NonFatal
   * `bench_detail.json` in the working directory.
   */
 object Bench {
-  private val Runs = 3
+  import BenchSupport.Runs
 
   private def fmt(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
 
@@ -38,44 +38,9 @@ object Bench {
     val runsPerQuery = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = scala.collection.mutable.ArrayBuffer[Double]()
-      var failed = false
-      var i = 0
-      while (i < Runs && !failed) {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          times += (System.nanoTime() - t0) / 1e9
-        } catch {
-          case NonFatal(e) =>
-            failed = true
-            errors(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}"
-        }
-        // r10 (verdict item 2): drop dead pin blocks BETWEEN runs, not
-        // just between gates — each run rebuilds the query and its
-        // checkpoints, so by run 3 a pin-heavy gate (x53's prefix-sum
-        // frame carries a struct-array column) held 3 copies of its
-        // RDD object cache, and the in-suite timing absorbed the GC
-        // pressure (driver 3.87 s vs isolated 2.07 s). Untimed: runs
-        // after t0 is captured, before the next run's timer starts.
-        // BLOCKING: async removal would execute inside the next timed
-        // run — the wait must land here, in untimed housekeeping.
-        try spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        catch { case NonFatal(_) => () }
-        i += 1
-      }
-      runsPerQuery(name) = times.toSeq
-      // Cross-query hygiene: each query's timing must not absorb the
-      // previous query's debris (r4 finding: t17/t18 showed 10×/2.6×
-      // run spreads sitting downstream of the streaming block). Between
-      // queries, drop any lingering temp views, unload cached
-      // state-store providers (heap maps / RocksDB handles from the
-      // streaming gates), clear the block-manager cache, and take a GC
-      // checkpoint so allocation debt lands HERE — in untimed
-      // housekeeping — instead of inside the next query's first run.
-      BenchSupport.hygiene(spark)
+      val (times, error) = BenchSupport.timeGate(spark, sfDir, name)
+      runsPerQuery(name) = times
+      error.foreach(errors(name) = _)
     }
     def median(ts: Seq[Double]): Double = {
       val s = ts.sorted

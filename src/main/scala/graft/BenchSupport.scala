@@ -92,21 +92,41 @@ object BenchSupport {
     }
   }
 
-  /** Cross-query hygiene (r4 finding, see Bench main loop). */
+  val Runs = 3
+
+  /** Times one gate as every bench pass does (suite, isolated child JVMs,
+    * `Dev time`: they must measure identically): up to [[Runs]] × `count()`,
+    * stopping at the first failure, then [[hygiene]]. Each run is a
+    * [[Pins.scoped]] closed after its timer stops, so a run's pins leave
+    * before the next one starts (r10: x53 carried every earlier run's
+    * blocks, 3.87 s in the suite against 2.07 s isolated). Returns the run
+    * times in seconds and the failure, if any. */
+  def timeGate(spark: SparkSession, sfDir: String,
+      name: String): (Seq[Double], Option[String]) = {
+    val fn = SparkEntry.queries(name)
+    val times = scala.collection.mutable.ArrayBuffer[Double]()
+    var error = Option.empty[String]
+    while (times.size < Runs && error.isEmpty) {
+      val t0 = System.nanoTime()
+      try Pins.scoped { fn(spark, sfDir).count(); times += (System.nanoTime() - t0) / 1e9 }
+      catch { case NonFatal(e) =>
+        error = Some(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
+      }
+    }
+    hygiene(spark)
+    (times.toSeq, error)
+  }
+
+  /** Between gates (r4: t17/t18 showed 10×/2.6× run spreads downstream
+    * of the streaming block): drop `graft_` temp views, unload cached
+    * state-store providers, and take a GC so allocation debt lands here,
+    * untimed, not in the next gate's first run. */
   def hygiene(spark: SparkSession): Unit = {
     try {
       spark.catalog.listTables().collect()
         .filter(t => t.isTemporary && t.name.startsWith("graft_"))
         .foreach(t => spark.catalog.dropTempView(t.name))
       org.apache.spark.sql.GraftStreamingBridge.unloadAllStateStores()
-      spark.catalog.clearCache()
-      // r9: gates now pin fan-out subtrees with lazy localCheckpoints,
-      // whose RDD blocks are otherwise released only when the
-      // ContextCleaner gets around to the dead RDDs — synchronous
-      // unpersist here keeps one gate's cache from pressuring the next
-      // gate's timing (the dropped DataFrames are never reused).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     } catch { case NonFatal(_) => () }
     System.gc()
   }

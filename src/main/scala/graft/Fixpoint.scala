@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{bit_xor, coalesce, col, count, lit, xxhas
 
 /** The one driver for round-carrying loops: connected components, label
   * propagation, k-core, PageRank, BFS, weighted paths, personalized
-  * PageRank, beam search and pointer doubling.
+  * PageRank, beam search, pointer doubling, HITS and k-means.
   *
   * Every round, round 0 included, is pinned through
   * [[Pins.pinIterative]]: the pin truncates lineage, so neither the plan
@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions.{bit_xor, coalesce, col, count, lit, xxhas
   *
   * Lazy loops ([[iterate]] with `eager = false`) run no action before
   * the caller's: all their rounds materialize inside the caller's first
-  * action. They get no extra job and no in-loop free; their superseded
-  * rounds stay cached until the ContextCleaner collects them.
+  * action. They get no extra job and no in-loop free; every round is
+  * freed when the runner's [[Pins.scoped]] closes after that action.
   *
   * Per-round records (rows, milliseconds) are not kept here: they wait
   * for the engine's telemetry tap.

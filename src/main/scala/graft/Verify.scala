@@ -14,11 +14,8 @@ object Verify {
     val spark = BenchSupport.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.queries.keys.filter(name => only.isEmpty || only(name)).foreach { name =>
+      try dump(spark, sfDir, outDir, name)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -31,4 +28,9 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Writes gate `name`'s result to `outDir/name`, then frees its pins. */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String, outDir: String,
+      name: String): Unit = Pins.scoped(SparkEntry.queries(name)(spark, sfDir)
+    .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
 }

@@ -77,7 +77,7 @@ object ConnectedComponents {
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 50): DataFrame = {
+      maxIter: Int = 50): DataFrame = graft.Pins.scoped {
     // a stable (count, checksum) of the edge set means the star
     // transforms are at their fixpoint
     val (cur, _) = graft.Fixpoint.untilStable(canonical(edges, srcCol, dstCol), maxIter)(

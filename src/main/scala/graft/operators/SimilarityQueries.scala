@@ -611,7 +611,7 @@ object SimilarityQueries {
     * first round that flipped nothing (= fixpoint), or `maxRounds` if
     * the dynamics still oscillate at the cap. */
   def propagateToFixpoint(
-      labels: DataFrame, knn: DataFrame, maxRounds: Int): DataFrame = {
+      labels: DataFrame, knn: DataFrame, maxRounds: Int): DataFrame = graft.Pins.scoped {
     import org.apache.spark.sql.expressions.Window
     val lbl = labels.select(col("vec_id"), col("label"))
     val iso = lbl.select(col("vec_id"))
@@ -659,7 +659,6 @@ object SimilarityQueries {
           Seq("nbr_id"))
         .groupBy(col("vec_id"), col("nl")).agg(count(lit(1)).as("c")))
     }
-    graft.Pins.release(edges) // only the rounds read it, and the last one is materialized
     lbl.select(col("vec_id"), col("label").as("init_label"))
       .join(state.select(col("vec_id"), col("label").as("final_label")), Seq("vec_id"))
       .withColumn("n_rounds", lit(rounds))
@@ -1173,9 +1172,6 @@ object SimilarityQueries {
         slice(Similarity.scaled(col("embedding")), 1, dims).as("sv"))
       .transform(graft.Pins.pinForFanout(_))
     val off = 10000000L
-    var cents = vecs.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("long").as("cid"), col("sv").as("cv"))
-      .transform(graft.Pins.pinIterative(_))
     def assign(c: DataFrame): DataFrame = vecs
       .crossJoin(broadcast(c))
       .withColumn("dist", aggregate(
@@ -1185,24 +1181,22 @@ object SimilarityQueries {
       .agg(min(struct(col("dist"), col("cid"))).as("best"))
       .select(col("vec_id"), col("sv"),
         col("best.dist").as("dist"), col("best.cid").as("cid"))
-    var assigned: DataFrame = null
-    // not on graft.Fixpoint: each round carries two frames (assigned,
-    // cents) and the helper carries one; the rounds are lazy, so no in-loop free
-    for (_ <- 1 to 3) {
-      assigned = assign(cents).transform(graft.Pins.pinIterative(_))
-      cents = assigned
-        .select(col("cid"), posexplode(col("sv")).as(Seq("dim", "comp")))
-        .groupBy(col("cid"), col("dim"))
-        .agg(sum(col("comp")).as("s"), count(lit(1)).as("cnt"))
-        .withColumn("comp", expr(s"(s + cnt * ${off}L) div cnt - ${off}L"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("comp")))).as("a"))
-        .select(col("cid"), transform(col("a"), s => s.getField("comp")).as("cv"))
-        .transform(graft.Pins.pinIterative(_))
-    }
+    def update(a: DataFrame): DataFrame = a
+      .select(col("cid"), posexplode(col("sv")).as(Seq("dim", "comp")))
+      .groupBy(col("cid"), col("dim"))
+      .agg(sum(col("comp")).as("s"), count(lit(1)).as("cnt"))
+      .withColumn("comp", expr(s"(s + cnt * ${off}L) div cnt - ${off}L"))
+      .groupBy(col("cid"))
+      .agg(array_sort(collect_list(struct(col("dim"), col("comp")))).as("a"))
+      .select(col("cid"), transform(col("a"), s => s.getField("comp")).as("cv"))
+    // the rounds carry the assignment; a round's centroids are derived
+    // from it and read once, by the next assignment's broadcast
+    val assigned = graft.Fixpoint.iterate(assign(vecs.filter(col("vec_id") < 8)
+      .select(col("vec_id").cast("long").as("cid"), col("sv").as("cv"))), 2)(
+      a => assign(update(a)))
     assigned.groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"), sum(col("dist")).as("inertia"))
-      .join(cents.select(col("cid"),
+      .join(update(assigned).select(col("cid"),
         aggregate(col("cv"), lit(0L), (acc, x) => acc + x).as("comp_sum")),
         Seq("cid"))
       .orderBy(col("cid"))
@@ -1350,7 +1344,7 @@ object SimilarityQueries {
     * cascades (the gate data is k-NN-regular enough that the 3-core
     * keeps everything; cascade behavior still needs pinning). */
   private[operators] def kcoreOf(nodes: DataFrame, e: DataFrame,
-      kCore: Int, maxRounds: Int): DataFrame = {
+      kCore: Int, maxRounds: Int): DataFrame = graft.Pins.scoped {
     val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b"))).distinct()
       .transform(graft.Pins.pinForFanout(_))
     // peeling only shrinks the survivor set, so an unchanged survivor
@@ -1440,36 +1434,34 @@ object SimilarityQueries {
       rounds: Int): DataFrame = {
     val e = edges.transform(graft.Pins.pinForFanout(_))
     val renorm = "cast((raw * cast(1000000000000 AS DECIMAL(38,0))) div s AS BIGINT)"
-    var hub = nodes
+    // r10: each (vec_id, raw) sum feeds TWO consumers — the node
+    // left-join AND the 1-row renorm aggregate, which rides a
+    // BroadcastExchange and so reuses no stage: unpinned, the edge-scale
+    // join + groupBy ran twice per side per round (the r9 recompute
+    // disease, 12 extra subtree runs over 3 rounds). Node-cardinality
+    // rows — cheap to pin.
+    def normalized(raw: DataFrame): DataFrame = {
+      val r = raw.transform(graft.Pins.pinForFanout(_))
+      nodes.join(r, Seq("vec_id"), "left")
+        .crossJoin(broadcast(r.agg(sum(col("raw")).as("s"))))
+        .select(col("vec_id"), coalesce(expr(renorm), lit(0L)).as("w"))
+    }
+    def authOf(hub: DataFrame): DataFrame = normalized(
+      e.join(hub.select(col("vec_id").as("src"), col("w")), Seq("src"))
+        .groupBy(col("dst").as("vec_id")).agg(sum(col("w")).as("raw")))
+    // read once, by the next round's authority sums, yet pinned: inlined
+    // there, AQE broadcast the edge list into that join, and s23's task
+    // time rose from about 1.5 s to 1.9–2.5 s (sf0.1, 4 cores)
+    def hubOf(auth: DataFrame): DataFrame = normalized(
+      e.join(auth.select(col("vec_id").as("dst"), col("w").as("aw")), Seq("dst"))
+        .groupBy(col("src").as("vec_id")).agg(sum(col("aw")).as("raw")))
+      .transform(graft.Pins.pinForFanout(_))
+    val hub0 = nodes
       .crossJoin(broadcast(nodes.agg(count(lit(1)).as("nn"))))
       .select(col("vec_id"), expr("1000000000000 div nn").as("w"))
-      .transform(graft.Pins.pinIterative(_))
-    var auth: DataFrame = null
-    // not on graft.Fixpoint: each round carries two frames (hub, auth)
-    // and the helper carries one; the rounds are lazy, so no in-loop free
-    for (_ <- 1 to rounds) {
-      // r10: ar/hr each feed TWO consumers — the node left-join AND the
-      // 1-row renorm aggregate, which rides a BroadcastExchange and so
-      // reuses no stage: unpinned, the edge-scale join + groupBy ran
-      // twice per side per round (the r9 recompute disease, 12 extra
-      // subtree runs over 3 rounds). Node-cardinality (vec_id, raw)
-      // rows — cheap to pin.
-      val ar = e.join(hub.select(col("vec_id").as("src"), col("w")), Seq("src"))
-        .groupBy(col("dst").as("vec_id")).agg(sum(col("w")).as("raw"))
-        .transform(graft.Pins.pinForFanout(_))
-      auth = nodes.join(ar, Seq("vec_id"), "left")
-        .crossJoin(broadcast(ar.agg(sum(col("raw")).as("s"))))
-        .select(col("vec_id"), coalesce(expr(renorm), lit(0L)).as("w"))
-        .transform(graft.Pins.pinIterative(_))
-      val hr = e.join(auth.select(col("vec_id").as("dst"), col("w").as("aw")), Seq("dst"))
-        .groupBy(col("src").as("vec_id")).agg(sum(col("aw")).as("raw"))
-        .transform(graft.Pins.pinForFanout(_))
-      hub = nodes.join(hr, Seq("vec_id"), "left")
-        .crossJoin(broadcast(hr.agg(sum(col("raw")).as("s"))))
-        .select(col("vec_id"), coalesce(expr(renorm), lit(0L)).as("w"))
-        .transform(graft.Pins.pinIterative(_))
-    }
-    hub.select(col("vec_id"), col("w").as("hub_scaled"))
+    // the rounds carry the authorities; a round's hubs are derived from them
+    val auth = graft.Fixpoint.iterate(authOf(hub0), rounds - 1)(a => authOf(hubOf(a)))
+    hubOf(auth).select(col("vec_id"), col("w").as("hub_scaled"))
       .join(auth.select(col("vec_id"), col("w").as("auth_scaled")), Seq("vec_id"))
       .orderBy(col("vec_id"))
   }

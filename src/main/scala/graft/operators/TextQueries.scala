@@ -788,13 +788,13 @@ object TextQueries {
   // the same token contributes the same pairs). So the corpus is
   // scanned ONCE — a map-side-combined groupBy(token) whose exchange
   // carries the vocabulary, not occurrences — and the 3-round merge
-  // loop (pair count → argmax → replace) iterates on the persisted
+  // loop (pair count → argmax → replace) iterates on the pinned
   // vocabulary-bounded table. At 100 TB: one corpus pass total, and
   // each round's pair-explode touches |vocab| strings, not |corpus|.
   // The driver still sees exactly ONE ROW per round (the argmax pair —
   // bounded by construction, the CMS-anchor/IVF-codebook pattern);
   // broadcast back as a literal, the merge stays inside codegen.
-  def t20(spark: SparkSession, dir: String): DataFrame = {
+  def t20(spark: SparkSession, dir: String): DataFrame = graft.Pins.scoped {
     val x1 = "\u0001"; val x2 = "\u0002"
     val vocab = Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
@@ -802,31 +802,29 @@ object TextQueries {
       .filter(length(col("t")) >= 2)
       .groupBy(col("t")).agg(count(lit(1)).as("w"))
       .select(regexp_replace(col("t"), "(.)", s"$x1$$1$x2").as("s"), col("w"))
-      .persist()
-    try {
-      var toks = vocab
-      val merges = Seq.newBuilder[(Int, String, String, Long)]
-      for (round <- 1 to 3) {
-        val top = toks
-          .select(split(trim(col("s"), x1 + x2), x2 + x1).as("syms"), col("w"))
-          .filter(size(col("syms")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(1, size(syms) - 1), i -> named_struct(" +
-              "'a', element_at(syms, i), 'b', element_at(syms, i + 1)))")).as("p"),
-            col("w"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("w")).as("n"))
-          .orderBy(col("n").desc, col("a"), col("b"))
-          .limit(1).head()
-        val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
-        merges += ((round, a, b, n))
-        toks = toks.select(call_function("replace", col("s"),
-          lit(x1 + a + x2 + x1 + b + x2), lit(x1 + a + b + x2)).as("s"), col("w"))
-      }
-      import spark.implicits._
-      merges.result().toDF("merge_round", "left_sym", "right_sym", "n")
-        .orderBy(col("merge_round"))
-    } finally vocab.unpersist()
+      .transform(graft.Pins.pinForFanout(_))
+    var toks = vocab
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    for (round <- 1 to 3) {
+      val top = toks
+        .select(split(trim(col("s"), x1 + x2), x2 + x1).as("syms"), col("w"))
+        .filter(size(col("syms")) >= 2)
+        .select(explode(expr(
+          "transform(sequence(1, size(syms) - 1), i -> named_struct(" +
+            "'a', element_at(syms, i), 'b', element_at(syms, i + 1)))")).as("p"),
+          col("w"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("w")).as("n"))
+        .orderBy(col("n").desc, col("a"), col("b"))
+        .limit(1).head()
+      val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
+      merges += ((round, a, b, n))
+      toks = toks.select(call_function("replace", col("s"),
+        lit(x1 + a + x2 + x1 + b + x2), lit(x1 + a + b + x2)).as("s"), col("w"))
+    }
+    import spark.implicits._
+    merges.result().toDF("merge_round", "left_sym", "right_sym", "n")
+      .orderBy(col("merge_round"))
   }
 
   /** One oracle BPE round: pair counts → argmax merge → corpus-wide
@@ -874,7 +872,7 @@ object TextQueries {
   // string length minus the two wrapper chars per symbol (exact
   // algebra on the wrapped form, no re-tokenization). sum_syms <
   // sum_chars by exactly the number of merge applications.
-  def t21(spark: SparkSession, dir: String): DataFrame = {
+  def t21(spark: SparkSession, dir: String): DataFrame = graft.Pins.scoped {
     val x1 = "\u0001"; val x2 = "\u0002"
     // Same weighted-vocabulary shape as t20, keyed (source, token) so
     // the final per-source stats stay exact; merge selection
@@ -887,42 +885,40 @@ object TextQueries {
       .groupBy(col("source"), col("t")).agg(count(lit(1)).as("w"))
       .select(col("source"),
         regexp_replace(col("t"), "(.)", s"$x1$$1$x2").as("s"), col("w"))
-      .persist()
-    try {
-      var toks = vocab
-      // not on graft.Fixpoint: the rounds are map-only replaces over the
-      // persisted vocabulary and pin nothing
-      for (_ <- 1 to 3) {
-        val top = toks
-          .select(split(trim(col("s"), x1 + x2), x2 + x1).as("syms"), col("w"))
-          .filter(size(col("syms")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(1, size(syms) - 1), i -> named_struct(" +
-              "'a', element_at(syms, i), 'b', element_at(syms, i + 1)))")).as("p"),
-            col("w"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("w")).as("n"))
-          .orderBy(col("n").desc, col("a"), col("b"))
-          .limit(1).head()
-        val (a, b) = (top.getString(0), top.getString(1))
-        toks = toks.select(col("source"), call_function("replace", col("s"),
-          lit(x1 + a + x2 + x1 + b + x2), lit(x1 + a + b + x2)).as("s"), col("w"))
-      }
-      // The per-source aggregate is bounded by #sources; materialize it
-      // before releasing the vocabulary cache (the drainToLocal pattern
-      // — the lazy plan must not outlive the persist that feeds it).
-      val agg = toks
-        .withColumn("n_syms",
-          size(split(trim(col("s"), x1 + x2), x2 + x1)).cast("long"))
-        .groupBy(col("source"))
-        .agg(sum(col("w")).as("n_toks"),
-          sum(col("w") * (length(col("s")) - lit(2) * col("n_syms")))
-            .as("sum_chars"),
-          sum(col("w") * col("n_syms")).as("sum_syms"))
-        .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(agg.collect(): _*)
-      spark.createDataFrame(rows, agg.schema)
-    } finally vocab.unpersist()
+      .transform(graft.Pins.pinForFanout(_))
+    var toks = vocab
+    // not on graft.Fixpoint: the rounds are map-only replaces over the
+    // pinned vocabulary and pin nothing
+    for (_ <- 1 to 3) {
+      val top = toks
+        .select(split(trim(col("s"), x1 + x2), x2 + x1).as("syms"), col("w"))
+        .filter(size(col("syms")) >= 2)
+        .select(explode(expr(
+          "transform(sequence(1, size(syms) - 1), i -> named_struct(" +
+            "'a', element_at(syms, i), 'b', element_at(syms, i + 1)))")).as("p"),
+          col("w"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("w")).as("n"))
+        .orderBy(col("n").desc, col("a"), col("b"))
+        .limit(1).head()
+      val (a, b) = (top.getString(0), top.getString(1))
+      toks = toks.select(col("source"), call_function("replace", col("s"),
+        lit(x1 + a + x2 + x1 + b + x2), lit(x1 + a + b + x2)).as("s"), col("w"))
+    }
+    // The per-source aggregate is bounded by #sources; materialize it
+    // before the scope frees the vocabulary pin (the drainToLocal
+    // pattern — the lazy plan must not outlive the pin that feeds it).
+    val agg = toks
+      .withColumn("n_syms",
+        size(split(trim(col("s"), x1 + x2), x2 + x1)).cast("long"))
+      .groupBy(col("source"))
+      .agg(sum(col("w")).as("n_toks"),
+        sum(col("w") * (length(col("s")) - lit(2) * col("n_syms")))
+          .as("sum_chars"),
+        sum(col("w") * col("n_syms")).as("sum_syms"))
+      .orderBy(col("source"))
+    val rows = java.util.Arrays.asList(agg.collect(): _*)
+    spark.createDataFrame(rows, agg.schema)
   }
 
   private val t21Sql =

@@ -50,9 +50,9 @@ object Dev {
       }
     case Seq("explain", sfDir, gates @ _*) =>
       known(gates).foreach { g =>
-        val df = graft.SparkEntry.queries(g)(spark, sfDir)
         println(s"===== $g =====")
-        println(df.queryExecution.explainString(FormattedMode))
+        println(graft.Pins.scoped(
+          graft.SparkEntry.queries(g)(spark, sfDir).queryExecution.explainString(FormattedMode)))
       }
     case Seq("sql", sfDir, statement) =>
       graft.Tables.names.foreach(t =>

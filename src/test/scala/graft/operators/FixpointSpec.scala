@@ -4,13 +4,15 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.{Fixpoint, Pins, SparkSpec}
 import graft.dedup.ConnectedComponents
 
 /** [[graft.Fixpoint]] frees each superseded round as soon as an action
-  * has read its successor, and the loops on it leave behind only the
-  * pins their result still reads. Where a spec holds every round, the
-  * ContextCleaner cannot be what freed them. */
+  * has read its successor, the loops on it leave behind only the pins
+  * their result still reads, and [[graft.Pins.scoped]] frees the rest.
+  * Where a spec holds every round, the ContextCleaner cannot be what
+  * freed them. */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -122,5 +124,78 @@ class FixpointSpec extends SparkSpec {
       val pd = leavesOnlyItsResultPins(SimilarityQueries.s37(spark, dir))
       assert(pd.map(_.getLong(2)).sum == 100L, "every node lies in exactly one basin")
     }
+  }
+
+  /** Whether a pin's blocks are still held: its checkpoint RDD is
+    * persistent, or its frame is cached. */
+  private def held(pin: DataFrame): Boolean = pin.queryExecution.logical match {
+    case r: LogicalRDD => persistent.contains(r.rdd.id)
+    case _ => pin.storageLevel != StorageLevel.NONE
+  }
+
+  private def inEveryPinMode(body: String => Unit): Unit = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_scope_ckpt")
+    val savedDir = spark.sparkContext.getCheckpointDir
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    try Seq("local", "persist", "reliable").foreach { mode =>
+      spark.conf.set("spark.graft.pin.mode", mode)
+      body(mode)
+    } finally {
+      spark.conf.unset("spark.graft.pin.mode")
+      spark.sparkContext.setCheckpointDir(savedDir.orNull)
+      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+    }
+  }
+
+  test("a scope around a lazy iterate's action leaves no pin behind") {
+    val rounds = ArrayBuffer.empty[DataFrame]
+    val sum = Pins.scoped {
+      val last = Fixpoint.iterate(Seq(1L, 2L).toDF("x"), 3) { r =>
+        rounds += r; r.select((col("x") * 2).as("x"))
+      }
+      rounds += last
+      assert(rounds.forall(held), "the rounds are pinned until the scope closes")
+      last.as[Long].collect().sum
+    }
+    assert(sum == 24L && rounds.size == 4)
+    assert(!rounds.exists(held), "a round outlived the scope")
+  }
+
+  test("a nested scope hands its parent only the pins its frame scans, in every pin.mode") {
+    inEveryPinMode { mode =>
+      var scanned, dropped: DataFrame = null
+      var afterInner = (false, false)
+      val total = Pins.scoped {
+        val out = Pins.scoped {
+          dropped = Pins.pinForFanout(spark.range(10).toDF("x"), eager = true)
+          scanned = Pins.pinForFanout(spark.range(20).toDF("y"), eager = true)
+          scanned.select((col("y") + lit(dropped.count())).as("z"))
+        }
+        afterInner = (held(scanned), held(dropped))
+        out.agg(sum("z")).head().getLong(0)
+      }
+      assert(total == 390L, mode)
+      if (mode != "reliable") // a reliable checkpoint holds files, not blocks
+        assert(afterInner == (true, false), s"pin.mode=$mode: (scanned, dropped) held after the inner scope")
+      assert(!held(scanned) && !held(dropped), s"pin.mode=$mode: the outer scope left a pin")
+    }
+  }
+
+  test("a scope whose body throws still frees its pins; a pin of a frame the user cached stays") {
+    inEveryPinMode { mode =>
+      var pin: DataFrame = null
+      intercept[IllegalStateException](Pins.scoped {
+        pin = Pins.pinForFanout(spark.range(5).toDF("x"), eager = true)
+        if (mode != "reliable") assert(held(pin))
+        throw new IllegalStateException("body failed")
+      })
+      assert(!held(pin), s"pin.mode=$mode")
+    }
+    spark.conf.set("spark.graft.pin.mode", "persist")
+    val mine = spark.range(7).toDF("x").cache()
+    try {
+      Pins.scoped(Pins.pinForFanout(spark.range(7).toDF("x"), eager = true).count())
+      assert(mine.storageLevel != StorageLevel.NONE, "the scope freed the user's cache entry")
+    } finally { spark.conf.unset("spark.graft.pin.mode"); mine.unpersist(); () }
   }
 }

@@ -69,18 +69,18 @@ class PinGateSpec extends SparkSpec {
   // representative pin consumers: prefix-sum helper (x30), multi-pin
   // merge (x9), basket fan-out (q34), graph loop + packed majority
   // (s12), bigram fan-outs (t38), prefix-filter (d26), self-join
-  // fan-outs (x48, s27), eager pointer-doubling rounds (s37)
+  // fan-outs (x48, s27), eager pointer-doubling rounds (s37), BPE
+  // vocabularies (t20, t21)
   private val pinGates = Seq("x30_abc_pareto", "x9_scd2_merge",
     "q34_frequent_pairs", "s12_label_prop_fixpoint", "t38_kneser_ney",
-    "d26_prefix_filter", "x48_runs_test", "s27_mmr", "s37_pointer_doubling")
+    "d26_prefix_filter", "x48_runs_test", "s27_mmr", "s37_pointer_doubling",
+    "t20_bpe_train", "t21_bpe_encode")
 
   test("pin.mode=persist (lineage kept) matches the localCheckpoint default") {
     pinGates.foreach { name =>
       val local = canon(gate(name))
       val persisted = withConf("spark.graft.pin.mode" -> "persist") {
-        try canon(gate(name))
-        finally spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.Pins.scoped(canon(gate(name)))
       }
       assert(local.nonEmpty, s"$name produced no rows")
       assert(local == persisted, s"$name diverged under pin.mode=persist")
@@ -107,5 +107,31 @@ class PinGateSpec extends SparkSpec {
       spark.sparkContext.setCheckpointDir(saved.orNull)
       org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     }
+  }
+
+  // the runners free what a gate pinned and nothing else: `Dev time`
+  // (BenchIsolated.time) and Verify's per-gate dump over the lazy-loop
+  // gates, t20's scoped vocabulary and x30's fan-out pins
+  test("Dev time and Verify free every pin a gate made and keep the user's cache") {
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val gates = Seq("s13_pagerank", "s16_bfs_hops", "s19_kmeans", "s23_hits",
+      "s35_graph_beam", "t20_bpe_train", "x30_abc_pareto")
+    // start from an empty block cache, so that no pin an earlier suite
+    // left to the ContextCleaner can vanish between the two snapshots
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val mine = spark.range(1000).toDF("x").cache()
+    assert(mine.count() == 1000)
+    val before = persistent
+    assert(before.size == 1)
+    try {
+      assert(graft.tools.BenchIsolated.time(spark, dir, gates).keySet == gates.toSet)
+      withTempDir("runner_scope") { out =>
+        gates.foreach(graft.Verify.dump(spark, dir, out, _))
+        assert(gates.forall(g => spark.read.parquet(s"$out/$g").count() > 0))
+      }
+      assert(persistent == before)
+      assert(mine.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        "the user's cache was evicted")
+    } finally { mine.unpersist(blocking = true); () }
   }
 }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level guards for the single paths the engine keeps: every
   * session comes from [[graft.BenchSupport.session]] (so a tool's number
-  * is a number the bench would give), every materialization pin goes
-  * through [[graft.Pins]] (so `spark.graft.pin.mode` reaches it), and
+  * is a number the bench would give), every materialization pin is made
+  * and freed in [[graft.Pins]] (so `spark.graft.pin.mode` reaches it and
+  * a scope frees only what it pinned), and
   * every round-carrying loop runs on [[graft.Fixpoint]] (so each round
   * is pinned and the round it replaces freed in one place), and every
   * Catalyst registration goes through [[graft.Graft.install]] (so every
@@ -59,8 +60,6 @@ class SourceGuardSpec extends AnyFunSuite {
 
   /** Loops that keep their own rounds; each states why at the loop. */
   private val ownLoops = Set(
-    "graft/operators/SimilarityQueries.scala" -> "hitsOf", // two frames per round
-    "graft/operators/SimilarityQueries.scala" -> "s19", // k-means: two frames per round
     "graft/operators/TpchQueries.scala" -> "q74") // keeps every round for its union
 
   test("the source tree is where the guards look") {
@@ -75,6 +74,12 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("localCheckpoint( and .checkpoint( only in Pins") {
     val hits = offenders(l => l.contains("localCheckpoint(") || l.contains(".checkpoint("),
+      "graft/Pins.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test(".persist(, unpersist( and getPersistentRDDs only in Pins") {
+    val hits = offenders(l => Seq(".persist(", "unpersist(", "getPersistentRDDs").exists(l.contains),
       "graft/Pins.scala")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
